@@ -31,14 +31,8 @@ object Checkpoints {
       if (!hooked) {
         hooked = true
         Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          Checkpoints.synchronized(created.toList).foreach(deleteRec)))
+          Checkpoints.synchronized(created.toList).foreach(Dirs.deleteRec)))
       }
     }
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

@@ -168,26 +168,11 @@ object DocxFixture {
       .map(p => s"field_$p: value_${(i * 31 + p * 7) % 97}")
       .mkString("\n")
 
-  /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"doc_$i%03d.docx").toPath,
-          Docx.docxBytes(docText(i), stored = true))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
+  /** Build the fixture if missing ([[Dirs.buildOnce]]); returns [[path]]. */
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      Dirs.write(tmp, f"doc_$i%03d.docx",
+        Docx.docxBytes(docText(i), stored = true))
     }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

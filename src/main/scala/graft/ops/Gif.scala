@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions.{col, element_at, split}
 /** One GIF file's census row: the structural fields derivable from the
   * block walk — version, logical-screen geometry, global-color-table
   * size, frame count, how many frames are interlaced — plus the total
-  * byte count. Pixel decode (palette mapping, GIF-LZW, Adam-4
-  * deinterlace) is [[Gif.decodeFrame0]], spec-graded against the JDK's
-  * own codec (the JPEG pixel-path split: census in the gate with a hex
-  * oracle, entropy-coded samples proven by differential). */
+  * byte count. The census oracle re-walks the blocks in the hex domain;
+  * the GIF-LZW index streams that [[Gif.parse]] decodes on the way
+  * (every frame must land on exactly width·height indices) are held to
+  * the JDK's own codec by GifSpec. */
 final case class GifMeta(file_name: String, version: String, width: Int,
                          height: Int, n_frames: Int, gct_entries: Int,
                          interlaced_frames: Int, total_bytes: Long)
@@ -236,24 +236,6 @@ object Gif {
     out
   }
 
-  /** Frame 0 decoded to packed 0xRRGGBB pixels at the FRAME's own
-    * geometry — what `ImageIO.read` hands back for the first image;
-    * the GifSpec differential compares them at exact equality. */
-  private[graft] def decodeFrame0(name: String,
-      b: Array[Byte]): (Int, Int, Array[Int]) = {
-    val (_, frames) = parse(name, b)
-    val f = frames.head
-    val rgb = new Array[Int](f.w * f.h)
-    var k = 0
-    while (k < rgb.length) {
-      val i3 = 3 * f.indices(k)
-      rgb(k) = ((f.palette(i3) & 0xff) << 16) |
-        ((f.palette(i3 + 1) & 0xff) << 8) | (f.palette(i3 + 2) & 0xff)
-      k += 1
-    }
-    (f.w, f.h, rgb)
-  }
-
   /** Scan a binaryFile frame (path, content) of .gif files into one
     * census row per file — the MediaCodec mapPartitions slot: linear
     * per-file, no shuffle, parallel by file. */
@@ -346,30 +328,11 @@ object GifFixture {
     bo.toByteArray
   }
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[PngFixture.ensure]] (content-keyed, tmp+rename). */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"img_$i%03d.gif").toPath, gifBytes(i))
-      }
-      (0 until animCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"seq_$i%03d.gif").toPath, gifAnimBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  /** Build the fixture if missing ([[Dirs.buildOnce]]); returns [[path]]. */
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach(i => Dirs.write(tmp, f"img_$i%03d.gif", gifBytes(i)))
+    (0 until animCount).foreach { i =>
+      Dirs.write(tmp, f"seq_$i%03d.gif", gifAnimBytes(i))
     }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

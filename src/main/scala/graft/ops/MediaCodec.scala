@@ -590,33 +590,15 @@ object MediaFixture {
     bb.array()
   }
 
-  /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"wav_$i%03d.wav").toPath, wavBytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"bmp_$i%03d.bmp").toPath, bmpBytes(i))
-      }
-      (0 until palBmpCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"bmpp_$i%03d.bmp").toPath,
-          bmpPaletteBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
+  /** Build the fixture if missing ([[Dirs.buildOnce]]); returns [[path]]. */
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      Dirs.write(tmp, f"wav_$i%03d.wav", wavBytes(i))
+      Dirs.write(tmp, f"bmp_$i%03d.bmp", bmpBytes(i))
     }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
+    (0 until palBmpCount).foreach { i =>
+      Dirs.write(tmp, f"bmpp_$i%03d.bmp", bmpPaletteBytes(i))
+    }
   }
 }
 
@@ -786,35 +768,14 @@ object PngFixture {
     out.toByteArray
   }
 
-  /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"img_$i%03d.png").toPath, pngBytes(i))
-      }
-      (0 until paletteCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"pimg_$i%03d.png").toPath,
-          pngPaletteBytes(i))
-      }
-      (0 until grayCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"gimg_$i%03d.png").toPath,
-          pngGrayBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
+  /** Build the fixture if missing ([[Dirs.buildOnce]]); returns [[path]]. */
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach(i => Dirs.write(tmp, f"img_$i%03d.png", pngBytes(i)))
+    (0 until paletteCount).foreach { i =>
+      Dirs.write(tmp, f"pimg_$i%03d.png", pngPaletteBytes(i))
     }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
+    (0 until grayCount).foreach { i =>
+      Dirs.write(tmp, f"gimg_$i%03d.png", pngGrayBytes(i))
+    }
   }
 }

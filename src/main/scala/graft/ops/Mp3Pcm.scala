@@ -3,139 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
 
-/** MPEG-1 Layer III SAMPLE decode (VERDICT r17 next-round #2 — the last
-  * declared stand-in). The census ([[Mp3]], q_media_mp3) is unchanged;
-  * this file adds the audio path: bit-reservoir navigation
-  * (main_data_begin), side-info parse, scalefactor decode (scfsi reuse,
-  * long/short slen pairs), Huffman spectral decode, requantization,
-  * short-block reorder, alias reduction, IMDCT with all four window
-  * types, frequency inversion, and the polyphase synthesis filterbank —
-  * the ISO/IEC 11172-3 clause 2.4.3.4 chain.
-  *
-  * EXACTNESS CONTRACT (the JPEG discipline, adapted): no MPEG-audio
-  * decoder exists in this sandbox to differential against (the JDK ships
-  * none — r12/r17 verdicts), so the grade is a generator-side
-  * differential over an EXACT FIXED-POINT spec: every stage operates on
-  * Q16/Q30 Longs with one defined rounding rule ([[Mp3Fixed.rs]]), every
-  * closed-form constant (IMDCT cosine matrices and windows, alias
-  * cs/ca from the eight spec ci values, polyphase N matrix, 2^(x/4)
-  * requantization powers) is quantized from StrictMath — bit-identical
-  * on every JVM. [[Mp3PcmFixture]] builds real frame streams by PACKING
-  * bits forward and predicts PCM by running the synthesis stages on the
-  * logical spectral content; [[Mp3Pcm.decodeFile]] PARSES the bits back.
-  * The spec pins exact Q16 sample equality, so the bitstream layer
-  * (side-info layout, scalefactor packing, Huffman codes + signs,
-  * reservoir offsets, region partitioning, short-block reorder) is
-  * differentially graded encoder-vs-decoder.
-  *
-  * TWO spec tables have no closed form and no in-sandbox source, and are
-  * handled honestly rather than guessed:
-  *  - Table B.7 big-value Huffman codes: the registry carries table 0
-  *    (zero-spectrum, bit-free — exact by definition), table 1 (four
-  *    codes, Kraft-complete, transcription verified by MP3 prefix-code
-  *    structure) and count1 table B (the spec's fixed 4-bit one's-
-  *    complement construction). Any other table_select REFUSES loudly
-  *    with the table number — the same discipline as the census's
-  *    free-format refusal, not a silent skip.
-  *  - Table B.3 synthesis window D: 512 tabulated coefficients with no
-  *    generating formula. [[Mp3Fixed.dWinQ]] is a clearly-labeled
-  *    deterministic prototype (scaled half-period sine) standing in for
-  *    the numeric table; the polyphase STRUCTURE (64-sample V shift,
-  *    N(i,k)=cos((16+i)(2k+1)pi/64) matrixing, the U/W gather and the
-  *    16-term window sum) is the spec's, and is what the impulse and
-  *    equality specs grade.
-  *
-  * Out of scope, refused loudly: stereo modes (mono/single_channel
-  * only), mixed blocks, CRC-protected frames, Huffman tables outside
-  * the registry. Reference behavior: the pipeline treats audio blobs as
-  * opaque payloads (reference `1/blob_paths.py` passes them through);
-  * the decode ladder exists for the 100 TB curation posture, where
-  * per-file decode is embarrassingly parallel mapPartitions work. */
-object Mp3Fixed {
-
-  /** The one rounding rule: arithmetic shift with half-up rounding
-    * (adding 2^(s-1) before the shift rounds half toward +inf for both
-    * signs — a DEFINED choice, applied everywhere). */
-  def rs(x: Long, s: Int): Long = (x + (1L << (s - 1))) >> s
-
-  private def q30(v: Double): Long = Math.round(v * (1L << 30))
-
-  /** Alias-reduction butterflies: the eight spec ci constants and their
-    * closed-form cs = 1/sqrt(1+ci^2), ca = ci*cs (clause 2.4.3.4.8.1). */
-  private val ci = Array(-0.6, -0.535, -0.33, -0.185, -0.095, -0.041,
-    -0.0142, -0.0037)
-  val csQ: Array[Long] =
-    ci.map(c => q30(1.0 / StrictMath.sqrt(1.0 + c * c)))
-  val caQ: Array[Long] =
-    ci.map(c => q30(c / StrictMath.sqrt(1.0 + c * c)))
-
-  /** 36-point IMDCT matrix: cos(pi/72 * (2i+1+18) * (2k+1)), Q30. */
-  val cosLongQ: Array[Array[Long]] = Array.tabulate(36, 18) { (i, k) =>
-    q30(StrictMath.cos(Math.PI / 72.0 * (2 * i + 19) * (2 * k + 1)))
-  }
-
-  /** 12-point IMDCT matrix: cos(pi/24 * (2i+1+6) * (2k+1)), Q30. */
-  val cosShortQ: Array[Array[Long]] = Array.tabulate(12, 6) { (i, k) =>
-    q30(StrictMath.cos(Math.PI / 24.0 * (2 * i + 7) * (2 * k + 1)))
-  }
-
-  private def sinL(i: Int) = StrictMath.sin(Math.PI / 36.0 * (i + 0.5))
-  private def sinS(i: Int) = StrictMath.sin(Math.PI / 12.0 * (i + 0.5))
-
-  /** Long-block windows by block_type (0 normal, 1 start, 3 stop), Q30:
-    * the spec's closed-form sine segments with the flat/zero shoulders. */
-  val winLongQ: Map[Int, Array[Long]] = Map(
-    0 -> Array.tabulate(36)(i => q30(sinL(i))),
-    1 -> Array.tabulate(36) { i =>
-      if (i < 18) q30(sinL(i))
-      else if (i < 24) q30(1.0)
-      else if (i < 30) q30(sinS(i - 18)) else 0L
-    },
-    3 -> Array.tabulate(36) { i =>
-      if (i < 6) 0L
-      else if (i < 12) q30(sinS(i - 6))
-      else if (i < 18) q30(1.0) else q30(sinL(i))
-    })
-
-  /** Short window sin(pi/12*(i+0.5)), Q30. */
-  val winShortQ: Array[Long] = Array.tabulate(12)(i => q30(sinS(i)))
-
-  /** Polyphase matrixing N(i,k) = cos((16+i)(2k+1)pi/64), Q30. */
-  val nMatQ: Array[Array[Long]] = Array.tabulate(64, 32) { (i, k) =>
-    q30(StrictMath.cos((16 + i) * (2 * k + 1) * Math.PI / 64.0))
-  }
-
-  /** STAND-IN for ISO Table B.3 (see file Scaladoc): a deterministic
-    * half-period sine prototype, |D| <= 1/16, Q30. The numeric spec
-    * table is unavailable in-sandbox; everything AROUND this table is
-    * the spec's structure and is graded by the fixture differential. */
-  val dWinQ: Array[Long] = Array.tabulate(512) { i =>
-    q30(StrictMath.sin(Math.PI * (i + 0.5) / 512.0) / 16.0)
-  }
-
-  /** Requantized spectral line in Q16: sign * |is|^(4/3) * 2^exp2arg.
-    * exp2arg arrives in exact quarter units from integer side-info
-    * fields, so StrictMath.pow(2, q/4.0) is deterministic spec data.
-    * The 2^26 bound keeps every downstream Long accumulation (36-term
-    * IMDCT, 32-term matrixing, 16-term window sum, all Q30 products)
-    * inside 63 bits — a loud contract, not a silent clamp. */
-  def requantQ16(isVal: Int, exp2argQuarters: Int): Long = {
-    if (isVal == 0) 0L
-    else {
-      val mag = StrictMath.pow(math.abs(isVal).toDouble, 4.0 / 3.0) *
-        StrictMath.pow(2.0, exp2argQuarters / 4.0)
-      val q = Math.round(math.signum(isVal).toDouble * mag * 65536.0)
-      require(math.abs(q) <= (1L << 26),
-        s"requantized line overflows the Q16 contract: $q")
-      q
-    }
-  }
-}
-
-/** Scalefactor-band boundary tables (ISO Table B.8) and the long-block
-  * preemphasis table — per-samplerate line boundaries, 23 long entries
-  * (21 scalefactors + the unscaled tail zone) and 14 short entries
-  * (per-window lines, 12 scalefactors + tail). */
+/** The band tables the fixture encoder needs: long-block scalefactor
+  * band boundaries (ISO Table B.8 — 23 entries per samplerate, 21
+  * scalefactors + the unscaled tail zone) and the scalefactor bit
+  * lengths. */
 object Mp3Bands {
   /** Long-block boundaries by samplerate index (44100, 48000, 32000). */
   val longB: Array[Array[Int]] = Array(
@@ -146,51 +17,15 @@ object Mp3Bands {
     Array(0, 4, 8, 12, 16, 20, 24, 30, 36, 44, 54, 66, 82, 102, 126, 156,
       194, 240, 296, 364, 448, 550, 576))
 
-  /** Short-block per-window boundaries by samplerate index. */
-  val shortB: Array[Array[Int]] = Array(
-    Array(0, 4, 8, 12, 16, 22, 30, 40, 52, 66, 84, 106, 136, 192),
-    Array(0, 4, 8, 12, 16, 22, 28, 38, 50, 64, 80, 100, 126, 192),
-    Array(0, 4, 8, 12, 16, 22, 30, 42, 58, 78, 104, 138, 180, 192))
-
-  /** Preemphasis table (21 long scalefactor bands; tail zone 0). */
-  val pretab: Array[Int] =
-    Array(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 3, 3, 3, 2, 0)
-
   /** scalefac_compress -> (slen1, slen2), ISO 2.4.2.7. */
   val slen: Array[(Int, Int)] = Array(
     (0, 0), (0, 1), (0, 2), (0, 3), (3, 0), (1, 1), (1, 2), (1, 3),
     (2, 1), (2, 2), (2, 3), (3, 1), (3, 2), (3, 3), (4, 2), (4, 3))
-
-  /** Long-block zone of a spectral line: 0..20 scalefactored, 21 tail. */
-  def longZone(srIdx: Int, line: Int): Int = {
-    val b = longB(srIdx)
-    var s = 0
-    while (s < 21 && line >= b(s + 1)) s += 1
-    s
-  }
-
-  /** Short-block mapping of a Huffman-order line: (sfb, window, logical
-    * line index). Huffman order groups each band's three windows
-    * back-to-back (3*start + w*width + l); the logical (reordered)
-    * position interleaves windows line-by-line (3*(start+l) + w) — the
-    * clause 2.4.3.4.5 reorder, shared by the decoder's reorder and the
-    * fixture's expectation builder so the mapping itself is graded by
-    * the PCM equality. */
-  def shortMap(srIdx: Int, hline: Int): (Int, Int, Int) = {
-    val b = shortB(srIdx)
-    var s = 0
-    while (s < 12 && hline >= 3 * b(s + 1)) s += 1
-    val start = b(s); val width = b(math.min(s + 1, 13)) - start
-    val off = hline - 3 * start
-    val w = off / width; val l = off % width
-    (s, w, 3 * (start + l) + w)
-  }
 }
 
-/** MSB-first bit reader over the concatenated main-data reservoir. */
+/** MSB-first bit reader (side-info parse). */
 private[graft] final class Mp3BitReader(b: Array[Byte], val name: String) {
-  var pos: Int = 0 // absolute bit position
-  def seekBits(bitPos: Int): Unit = { pos = bitPos }
+  private var pos = 0 // absolute bit position
   def bits(n: Int): Int = {
     var v = 0; var i = 0
     while (i < n) {
@@ -222,33 +57,15 @@ private[graft] final class Mp3BitWriter {
   }
 }
 
-/** The Huffman registry (see file Scaladoc for the honest-scope note):
-  * table 0 (no bits, zero pair), table 1 (2x2, Kraft-complete), and
-  * count1 table B (fixed 4-bit one's-complement quadruples). Everything
-  * else refuses with the table number. */
+/** The fixture encoder's Huffman codes: big-value table 0 (no bits,
+  * zero pair), table 1 (2x2, Kraft-complete) and count1 table B (fixed
+  * 4-bit one's-complement quadruples). Any other table refuses with its
+  * number. */
 object Mp3Huff {
   /** Table 1: (x, y) -> (hlen, hcod). */
   val table1: Vector[((Int, Int), (Int, Int))] = Vector(
     (0, 0) -> ((1, 1)), (0, 1) -> ((3, 1)),
     (1, 0) -> ((2, 1)), (1, 1) -> ((3, 0)))
-
-  def decodePair(r: Mp3BitReader, id: Int): (Int, Int) = id match {
-    case 0 => (0, 0)
-    case 1 =>
-      var code = 0; var len = 0
-      while (len <= 3) {
-        code = (code << 1) | r.bits(1); len += 1
-        table1.find { case (_, (l, c)) => l == len && c == code } match {
-          case Some((xy, _)) => return xy
-          case None          =>
-        }
-      }
-      throw new IllegalArgumentException(
-        s"${r.name}: invalid table-1 Huffman code")
-    case n => throw new IllegalArgumentException(
-      s"${r.name}: Huffman table $n not in the registry (ISO B.7 " +
-        "transcription unavailable in-sandbox; tables {0,1} supported)")
-  }
 
   def encodePair(w: Mp3BitWriter, id: Int, x: Int, y: Int): Unit = id match {
     case 0 =>
@@ -261,124 +78,16 @@ object Mp3Huff {
 
   /** count1 table B: quadruple (v,w,x,y) -> 4-bit one's complement of
     * the bits v..y (v most significant). */
-  def decodeQuadB(r: Mp3BitReader): (Int, Int, Int, Int) = {
-    val n = ~r.bits(4) & 0xF
-    ((n >> 3) & 1, (n >> 2) & 1, (n >> 1) & 1, n & 1)
-  }
-
   def encodeQuadB(w: Mp3BitWriter, v: Int, x: Int, y: Int, z: Int): Unit =
     w.put(~((v << 3) | (x << 2) | (y << 1) | z) & 0xF, 4)
 }
 
-/** Per-granule side information (mono field set, ISO 2.4.1.7). */
+/** Per-granule side information the census reports (mono field set,
+  * ISO 2.4.1.7); table selects and subblock gains are read past. */
 final case class Mp3GranuleSide(
     part23: Int, bigValues: Int, globalGain: Int, scalefacCompress: Int,
-    windowSwitching: Boolean, blockType: Int, mixed: Boolean,
-    tableSelect: Array[Int], subblockGain: Array[Int],
-    region0Count: Int, region1Count: Int, preflag: Int,
-    scalefacScale: Int, count1Table: Int)
-
-/** The synthesis filterbank state: per-subband IMDCT overlap store and
-  * the 1024-sample polyphase V vector — one instance per file, zeroed
-  * at stream start, threaded through every granule. */
-final class Mp3SynthState {
-  import Mp3Fixed._
-  private val overlap = Array.ofDim[Long](32, 18)
-  private val v = new Array[Long](1024)
-
-  /** One polyphase step: shift V by 64, matrix 32 subband samples in,
-    * gather U, window by D, 16-term sum -> 32 Q16 PCM samples.
-    * Visible for the structural impulse spec. */
-  private[graft] def polyphaseStep(s: Array[Long]): Array[Long] = {
-    var i = 1023
-    while (i >= 64) { v(i) = v(i - 64); i -= 1 }
-    i = 0
-    while (i < 64) {
-      var acc = 0L; var k = 0
-      while (k < 32) { acc += nMatQ(i)(k) * s(k); k += 1 }
-      v(i) = rs(acc, 30)
-      i += 1
-    }
-    val out = new Array[Long](32)
-    var j = 0
-    while (j < 32) {
-      var acc = 0L; var b = 0
-      while (b < 16) {
-        // U(64b' + i) gathers V(128b' + i) and V(128b' + 96 + i); the
-        // two halves of each 32-sample group alternate through D.
-        val bb = b >> 1
-        val u = if ((b & 1) == 0) v(128 * bb + j) else v(128 * bb + 96 + j)
-        acc += u * dWinQ(32 * b + j)
-        b += 1
-      }
-      out(j) = rs(acc, 30)
-      j += 1
-    }
-    out
-  }
-
-  /** One granule: alias-reduced Q16 spectrum (576, logical order) ->
-    * 576 Q16 time samples via per-subband IMDCT + overlap-add,
-    * frequency inversion, and 18 polyphase steps. */
-  def granule(xr: Array[Long], blockType: Int): Array[Long] = {
-    require(xr.length == 576, "granule expects 576 lines")
-    val time = Array.ofDim[Long](18, 32)
-    var sb = 0
-    while (sb < 32) {
-      val z = new Array[Long](36)
-      if (blockType == 2) {
-        var w = 0
-        while (w < 3) {
-          var i = 0
-          while (i < 12) {
-            var acc = 0L; var k = 0
-            while (k < 6) {
-              acc += cosShortQ(i)(k) * xr(18 * sb + 3 * k + w); k += 1
-            }
-            val x = rs(acc, 30)
-            z(6 + 6 * w + i) += rs(x * winShortQ(i), 30)
-            i += 1
-          }
-          w += 1
-        }
-      } else {
-        val win = winLongQ(blockType)
-        var i = 0
-        while (i < 36) {
-          var acc = 0L; var k = 0
-          while (k < 18) { acc += cosLongQ(i)(k) * xr(18 * sb + k); k += 1 }
-          z(i) = rs(rs(acc, 30) * win(i), 30)
-          i += 1
-        }
-      }
-      var i = 0
-      while (i < 18) {
-        val s = z(i) + overlap(sb)(i)
-        // frequency inversion: odd time samples of odd subbands negate
-        time(i)(sb) = if ((sb & 1) == 1 && (i & 1) == 1) -s else s
-        overlap(sb)(i) = z(18 + i)
-        i += 1
-      }
-      sb += 1
-    }
-    val out = new Array[Long](576)
-    var t = 0
-    while (t < 18) {
-      val s = polyphaseStep(time(t))
-      System.arraycopy(s, 0, out, 32 * t, 32)
-      t += 1
-    }
-    out
-  }
-}
-
-/** One MP3 file's decoded-sample summary: the "sample columns". q16_*
-  * aggregate the exact fixed-point samples; pcm16_* the clamped 16-bit
-  * render; pcm_md5 fingerprints the full Q16 stream (big-endian longs). */
-final case class Mp3PcmRow(file_name: String, sample_rate: Int,
-                           n_frames: Long, n_samples: Long, q16_min: Long,
-                           q16_max: Long, q16_sum: Long, pcm16_min: Int,
-                           pcm16_max: Int, pcm_md5: String)
+    windowSwitching: Boolean, blockType: Int, region0Count: Int,
+    region1Count: Int, preflag: Int, scalefacScale: Int, count1Table: Int)
 
 /** Flattened side-info gate row (see [[Mp3Pcm.sideRows]]). */
 final case class Mp3SideRow(file_name: String, frame_idx: Int, granule: Int,
@@ -388,26 +97,25 @@ final case class Mp3SideRow(file_name: String, frame_idx: Int, granule: Int,
                             region1: Int, preflag: Int, sf_scale: Int,
                             count1_table: Int)
 
+/** MPEG-1 Layer III side-information census (q_mp3_sideinfo) and the
+  * bit-packing encoder that builds its fixture ([[Mp3PcmFixture]]).
+  * The census ([[Mp3]], q_media_mp3) counts frames; this file reads the
+  * layer below it — each mono frame's 17-byte side-info block:
+  * main_data_begin (the bit-reservoir offset), scfsi, and both
+  * granules' part2_3_length, big_values, global_gain,
+  * scalefac_compress, window switching with its block type (or the
+  * region counts of a long granule), preflag, scalefac_scale and
+  * count1 table. The oracle re-reads every field
+  * with fixed-offset bit arithmetic over the same bytes.
+  *
+  * Samples are never decoded: the reference passes audio blobs through
+  * as opaque payloads (reference `1/blob_paths.py`), so the engine
+  * stops at the side information.
+  *
+  * Out of scope, refused loudly: stereo modes (the 17-byte layout is
+  * the mono one), CRC-protected frames, free-format and reserved
+  * header fields, mixed blocks. */
 object Mp3Pcm {
-  import Mp3Fixed._
-
-  /** Alias-reduction butterflies over the 31 subband boundaries of a
-    * long-block spectrum (shared by decoder and fixture expectations —
-    * closed-form constants, see [[Mp3Fixed.csQ]]). */
-  def aliasReduce(xr: Array[Long]): Unit = {
-    var sb = 1
-    while (sb < 32) {
-      var j = 0
-      while (j < 8) {
-        val a = xr(18 * sb - 1 - j); val b = xr(18 * sb + j)
-        xr(18 * sb - 1 - j) = rs(a * csQ(j) - b * caQ(j), 30)
-        xr(18 * sb + j) = rs(b * csQ(j) + a * caQ(j), 30)
-        j += 1
-      }
-      sb += 1
-    }
-  }
-
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
 
   /** Parse one mono side-info block (17 bytes) into per-granule fields
@@ -425,220 +133,30 @@ object Mp3Pcm {
       val globalGain = r.bits(8)
       val sfc = r.bits(4)
       val ws = r.bits(1) == 1
-      if (ws) {
-        val bt = r.bits(2)
-        val mixed = r.bits(1) == 1
-        require(bt != 0, s"$name: window_switching with block_type 0")
-        require(!mixed, s"$name: mixed blocks not supported (refusal)")
-        val ts = Array.fill(2)(r.bits(5))
-        val sbg = Array.fill(3)(r.bits(3))
-        val g = Mp3GranuleSide(part23, bigValues, globalGain, sfc,
-          windowSwitching = true, bt, mixed, ts, sbg, 0, 0, 0, 0, 0)
-        val pre = r.bits(1); val ss = r.bits(1); val c1 = r.bits(1)
-        g.copy(preflag = pre, scalefacScale = ss, count1Table = c1)
-      } else {
-        val ts = Array.fill(3)(r.bits(5))
-        val r0 = r.bits(4); val r1 = r.bits(3)
-        val pre = r.bits(1); val ss = r.bits(1); val c1 = r.bits(1)
-        Mp3GranuleSide(part23, bigValues, globalGain, sfc,
-          windowSwitching = false, 0, mixed = false, ts, Array(0, 0, 0),
-          r0, r1, pre, ss, c1)
-      }
+      val (bt, r0, r1) =
+        if (ws) {
+          val bt = r.bits(2)
+          require(bt != 0, s"$name: window_switching with block_type 0")
+          require(r.bits(1) == 0, s"$name: mixed blocks not supported (refusal)")
+          r.bits(10 + 9) // table_select[0..1], subblock_gain[0..2]
+          (bt, 0, 0)
+        } else {
+          r.bits(15) // table_select[0..2]
+          val r0 = r.bits(4); val r1 = r.bits(3)
+          (0, r0, r1)
+        }
+      val pre = r.bits(1); val ss = r.bits(1); val c1 = r.bits(1)
+      Mp3GranuleSide(part23, bigValues, globalGain, sfc, ws, bt, r0, r1,
+        pre, ss, c1)
     }
     (mainDataBegin, scfsi, grs)
   }
 
-  /** Decode one granule's scalefactors + spectrum from the reservoir
-    * reader positioned at the granule start; returns the requantized,
-    * reordered, alias-reduced Q16 spectrum. prevLong carries granule
-    * 0's long scalefactors for scfsi reuse. */
-  private def decodeGranule(r: Mp3BitReader, g: Mp3GranuleSide,
-                            srIdx: Int, scfsi: Array[Int], granuleIdx: Int,
-                            prevLong: Array[Int], name: String)
-      : Array[Long] = {
-    val start = r.pos
-    val (slen1, slen2) = Mp3Bands.slen(g.scalefacCompress)
-    val xr = new Array[Long](576)
-    if (g.part23 == 0) {
-      require(g.bigValues == 0, s"$name: empty granule with big_values")
-      return xr
-    }
-    if (g.blockType == 2) {
-      require(scfsi.forall(_ == 0), s"$name: scfsi set on a short granule")
-      require(g.preflag == 0, s"$name: preflag set on a short granule")
-      val sf = Array.ofDim[Int](3, 13)
-      var s = 0
-      while (s < 12) {
-        val sl = if (s < 6) slen1 else slen2
-        var w = 0
-        while (w < 3) { sf(w)(s) = if (sl == 0) 0 else r.bits(sl); w += 1 }
-        s += 1
-      }
-      decodeSpectrum(r, g, srIdx, name, start, hline => {
-        val (sfb, w, logical) = Mp3Bands.shortMap(srIdx, hline)
-        val q4 = g.globalGain - 210 - 8 * g.subblockGain(w) -
-          2 * (g.scalefacScale + 1) * sf(w)(sfb)
-        (logical, q4)
-      }, xr)
-    } else {
-      val sf = new Array[Int](22)
-      var grp = 0
-      val bounds = Array(0, 6, 11, 16, 21)
-      while (grp < 4) {
-        val sl = if (grp < 2) slen1 else slen2
-        var s = bounds(grp)
-        while (s < bounds(grp + 1)) {
-          sf(s) =
-            if (granuleIdx == 1 && scfsi(grp) == 1) prevLong(s)
-            else if (sl == 0) 0
-            else r.bits(sl)
-          s += 1
-        }
-        grp += 1
-      }
-      if (granuleIdx == 0) System.arraycopy(sf, 0, prevLong, 0, 22)
-      decodeSpectrum(r, g, srIdx, name, start, line => {
-        val sfb = Mp3Bands.longZone(srIdx, line)
-        val q4 = g.globalGain - 210 - 2 * (g.scalefacScale + 1) *
-          (sf(sfb) + g.preflag * Mp3Bands.pretab(sfb))
-        (line, q4)
-      }, xr)
-      aliasReduce(xr)
-    }
-    xr
-  }
-
-  /** Huffman-decode the big-values regions and the count1 tail, requant
-    * each line through lineMap (huffman line -> (logical line, exponent
-    * quarter-units)), enforcing the exact part2_3_length landing. */
-  private def decodeSpectrum(r: Mp3BitReader, g: Mp3GranuleSide, srIdx: Int,
-                             name: String, start: Int,
-                             lineMap: Int => (Int, Int),
-                             xr: Array[Long]): Unit = {
-    val bigEnd = 2 * g.bigValues
-    require(bigEnd <= 576, s"$name: big_values overflow ($bigEnd lines)")
-    val (r1s, r2s) =
-      if (g.windowSwitching) (36, 576)
-      else {
-        val b = Mp3Bands.longB(srIdx)
-        (b(math.min(g.region0Count + 1, 22)),
-          b(math.min(g.region0Count + g.region1Count + 2, 22)))
-      }
-    def put(hline: Int, v: Int): Unit = {
-      if (v != 0) {
-        val (logical, q4) = lineMap(hline)
-        xr(logical) = Mp3Fixed.requantQ16(v, q4)
-      }
-    }
-    var line = 0
-    while (line < bigEnd) {
-      val table =
-        if (line < r1s) g.tableSelect(0)
-        else if (line < r2s) g.tableSelect(1)
-        else g.tableSelect(2)
-      val (x, y) = Mp3Huff.decodePair(r, table)
-      val xv = if (x != 0 && r.bits(1) == 1) -x else x
-      val yv = if (y != 0 && r.bits(1) == 1) -y else y
-      put(line, xv); put(line + 1, yv)
-      line += 2
-    }
-    val limit = start + g.part23
-    while (r.pos < limit && line + 4 <= 576) {
-      require(g.count1Table == 1,
-        s"$name: count1 table A not in the registry (table B only)")
-      val (v, w, x, y) = Mp3Huff.decodeQuadB(r)
-      val vals = Array(v, w, x, y)
-      var j = 0
-      while (j < 4) {
-        val mag = vals(j)
-        val sv = if (mag != 0 && r.bits(1) == 1) -mag else mag
-        put(line + j, sv)
-        j += 1
-      }
-      line += 4
-    }
-    require(r.pos == limit,
-      s"$name: granule data landed at bit ${r.pos}, expected $limit " +
-        "(exactness contract: no overrun discard, no stuffing skip)")
-  }
-
-  /** Decode a whole file: frame walk, reservoir assembly, per-granule
-    * decode + synthesis. Returns the exact Q16 sample stream. */
-  def decodeFile(name: String, b: Array[Byte]): (Mp3PcmRow, Array[Long]) = {
-    // frame walk (census discipline: exact landings, loud refusals)
-    var pos = 0
-    val frames = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var srIdx = -1
-    while (pos < b.length) {
-      require(pos + 4 <= b.length, s"$name: truncated header at $pos")
-      require(u8(b, pos) == 0xFF && u8(b, pos + 1) == 0xFB,
-        s"$name: need MPEG-1 Layer III no-CRC sync at $pos (decode scope)")
-      val brIdx = u8(b, pos + 2) >> 4
-      val si = (u8(b, pos + 2) >> 2) & 3
-      val pad = (u8(b, pos + 2) >> 1) & 1
-      require(brIdx >= 1 && brIdx <= 14, s"$name: bitrate index $brIdx")
-      require(si <= 2, s"$name: reserved samplerate index")
-      require(srIdx == -1 || srIdx == si, s"$name: samplerate change")
-      require((u8(b, pos + 3) >> 6) == 3,
-        s"$name: only single_channel (mono) streams decode (refusal)")
-      srIdx = si
-      frames += pos
-      pos += Mp3.frameLen(Mp3.kbpsTable(brIdx), Mp3.srTable(si), pad)
-    }
-    require(pos == b.length, s"$name: frame walk overran EOF")
-    require(frames.nonEmpty, s"$name: empty file")
-    val sr = Mp3.srTable(srIdx)
-    // reservoir: concatenate the main-data areas; remember each frame's
-    // area start inside the global stream
-    val areas = frames.map { f =>
-      val brIdx = u8(b, f + 2) >> 4
-      val pad = (u8(b, f + 2) >> 1) & 1
-      val len = Mp3.frameLen(Mp3.kbpsTable(brIdx), sr, pad)
-      java.util.Arrays.copyOfRange(b, f + 21, f + len)
-    }
-    val global = areas.toArray.flatten
-    val areaStart = areas.scanLeft(0)(_ + _.length)
-    val reader = new Mp3BitReader(global, name)
-    val state = new Mp3SynthState
-    val samples = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val prevLong = new Array[Int](22)
-    var fi = 0
-    while (fi < frames.length) {
-      val (mdb, scfsi, grs) = parseSideInfo(b, frames(fi) + 4, name)
-      val dataStart = areaStart(fi) - mdb
-      require(dataStart >= 0,
-        s"$name: main_data_begin $mdb reaches before the stream start")
-      reader.seekBits(dataStart * 8)
-      var gi = 0
-      while (gi < 2) {
-        val g = grs(gi)
-        if (g.blockType == 2)
-          require(scfsi.forall(_ == 0), s"$name: scfsi with short blocks")
-        val xr = decodeGranule(reader, g, srIdx, scfsi, gi, prevLong, name)
-        samples ++= state.granule(xr, g.blockType)
-        gi += 1
-      }
-      fi += 1
-    }
-    val q16 = samples.toArray
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    q16.foreach { s => bb.clear(); bb.putLong(s); md.update(bb.array()) }
-    val md5 = md.digest().map(x => f"$x%02x").mkString
-    def pcm16(q: Long): Int =
-      math.max(-32768L, math.min(32767L, rs(q, 16))).toInt
-    val row = Mp3PcmRow(name, sr, frames.length.toLong, q16.length.toLong,
-      if (q16.isEmpty) 0L else q16.min, if (q16.isEmpty) 0L else q16.max,
-      q16.sum, if (q16.isEmpty) 0 else q16.map(pcm16).min,
-      if (q16.isEmpty) 0 else q16.map(pcm16).max, md5)
-    (row, q16)
-  }
-
   /** One frame-granule's side information, flattened for the gate: the
-    * REAL decode-path parse ([[parseSideInfo]]) on the engine side, a
+    * bit-reader parse ([[parseSideInfo]]) on the engine side, a
     * fixed-offset hex bit walk on the oracle side (q_mp3_sideinfo).
     * ws granules report region0/region1 as 0 (the fields do not exist
-    * in their layout), mirroring [[Mp3GranuleSide]]'s defaults. */
+    * in their layout). */
   def sideRows(name: String, b: Array[Byte]): Seq[Mp3SideRow] = {
     var pos = 0
     val out = scala.collection.mutable.ArrayBuffer.empty[Mp3SideRow]
@@ -651,6 +169,8 @@ object Mp3Pcm {
       val si = (u8(b, pos + 2) >> 2) & 3
       val pad = (u8(b, pos + 2) >> 1) & 1
       require(brIdx >= 1 && brIdx <= 14 && si <= 2, s"$name: bad header")
+      require((u8(b, pos + 3) >> 6) == 3,
+        s"$name: only single_channel (mono) side info parses (refusal)")
       val (mdb, scfsi, grs) = parseSideInfo(b, pos + 4, name)
       val mask = (scfsi(0) << 3) | (scfsi(1) << 2) | (scfsi(2) << 1) | scfsi(3)
       grs.zipWithIndex.foreach { case (g, gi) =>
@@ -673,16 +193,5 @@ object Mp3Pcm {
     df.select(element_at(split(col("path"), "/"), -1).as("f"), col("content"))
       .as[(String, Array[Byte])]
       .mapPartitions(_.flatMap { case (n, bytes) => sideRows(n, bytes) })
-  }
-
-  /** Decode a binaryFile frame of .mp3 files into one sample-summary row
-    * per file — mapPartitions decode, columnar downstream (the
-    * [[Mp3.censusOf]] slot, now with real sample columns). */
-  def decodeOf(df: DataFrame): Dataset[Mp3PcmRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(element_at(split(col("path"), "/"), -1).as("f"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (n, bytes) => decodeFile(n, bytes)._1 })
   }
 }

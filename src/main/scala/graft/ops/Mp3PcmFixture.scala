@@ -1,21 +1,19 @@
 package graft.ops
 
-/** Deterministic MPEG-1 Layer III DECODE corpus — the encoder side of
-  * the sample-exactness differential (see [[Mp3Pcm]]'s Scaladoc). Every
-  * file is a real mono no-CRC frame stream PACKED bit by bit from a
-  * per-(file, frame, granule) content script; [[expectedQ16]] predicts
-  * the decoder's exact Q16 PCM by running the shared synthesis stages
-  * on the script's logical spectral content, so any disagreement in the
-  * bitstream layer (side-info layout, scalefactor packing + scfsi
-  * reuse, Huffman codes and sign bits, reservoir offsets, region
-  * partitioning, the short-block reorder) breaks exact equality.
+/** Deterministic MPEG-1 Layer III side-info corpus for q_mp3_sideinfo
+  * (see [[Mp3Pcm]]). Every file is a real mono no-CRC frame stream
+  * PACKED bit by bit from a per-(file, frame, granule) content script:
+  * scalefactors (with scfsi reuse), Huffman-coded spectral lines and
+  * signs, the count1 tail and the reservoir offsets all land in real
+  * main-data areas, so each side-info field the census reads describes
+  * bits that are actually there.
   *
   * File classes (i mod 5):
   *  0 — all long blocks (block_type 0), three regions, count1 tail.
   *  1 — window-type ladder: granules cycle 0 -> 1 (start) -> 2 (short,
-  *      with subblock gains) -> 3 (stop), exercising every IMDCT window
-  *      and the overlap-add across changing block types.
-  *  2 — all short blocks (triple-window scalefactors, reorder).
+  *      with subblock gains) -> 3 (stop), covering both side-info
+  *      layout branches.
+  *  2 — all short blocks (triple-window scalefactors).
   *  3 — preflag + scalefac_scale=1 + a table-0 (bit-free) region 2.
   *  4 — scfsi reuse (granule 1 inherits scalefactor groups 0 and 2)
   *      AND a nonzero bit reservoir: every frame after the first runs
@@ -103,7 +101,7 @@ object Mp3PcmFixture {
 
   /** Both granule scripts of a frame, with class-4 scfsi groups 0 and 2
     * (long bands 0..5 and 11..15) copied from granule 0 into granule 1
-    * — the values the decoder must REUSE rather than re-read. */
+    * — the values scfsi says are reused rather than re-sent. */
   def frameScripts(i: Int, f: Int): Array[GScript] = {
     val g0 = scriptOf(i, f, 0)
     val g1 = scriptOf(i, f, 1)
@@ -238,62 +236,11 @@ object Mp3PcmFixture {
     out.toByteArray
   }
 
-  /** The decoder's expected exact Q16 PCM for file i, computed from the
-    * LOGICAL spectral content (no bitstream involved): requantize each
-    * scripted line through the shared exponent arithmetic and mapping,
-    * alias-reduce, and run the shared synthesis state frame by frame. */
-  def expectedQ16(i: Int): Array[Long] = {
-    val srIdx = srIdxOf(i)
-    val state = new Mp3SynthState
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    for (f <- 0 until framesOf(i); sc <- frameScripts(i, f)) {
-      val xr = new Array[Long](576)
-      val total = sc.bigEnd + 4 * sc.nq
-      for (l <- 0 until total) {
-        val v = sc.values(l)
-        if (v != 0) {
-          if (sc.bt == 2) {
-            val (sfb, wn, logical) = Mp3Bands.shortMap(srIdx, l)
-            val q4 = sc.gg - 210 - 8 * sc.sbg(wn) -
-              2 * (sc.ss + 1) * sc.sfShort(wn)(sfb)
-            xr(logical) = Mp3Fixed.requantQ16(v, q4)
-          } else {
-            val sfb = Mp3Bands.longZone(srIdx, l)
-            val q4 = sc.gg - 210 -
-              2 * (sc.ss + 1) * (sc.sfLong(sfb) + sc.pre * Mp3Bands.pretab(sfb))
-            xr(l) = Mp3Fixed.requantQ16(v, q4)
-          }
-        }
-      }
-      if (sc.bt != 2) Mp3Pcm.aliasReduce(xr)
-      out ++= state.granule(xr, sc.bt)
-    }
-    out.toArray
-  }
-
   def path: String = new java.io.File(
     System.getProperty("java.io.tmpdir"), "graft_mp3pcm_v1").getAbsolutePath
 
-  /** Build the on-disk corpus if missing (content-keyed dir, tmp+rename
-    * — the [[Mp3Fixture.ensure]] contract). */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"pcm_$i%03d.mp3").toPath, mp3Bytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
-    }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
+  /** Build the on-disk corpus if missing ([[Dirs.buildOnce]]). */
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach(i => Dirs.write(tmp, f"pcm_$i%03d.mp3", mp3Bytes(i)))
   }
 }

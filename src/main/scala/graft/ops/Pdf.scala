@@ -1127,35 +1127,17 @@ object PdfFixture {
     bytes
   }
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[Mp3Fixture.ensure]] (content-keyed, tmp+rename). v3:
-    * every doc ships in THREE framings — classic doc_NNN.pdf, the
+  /** Build the fixture if missing ([[Dirs.buildOnce]]); returns [[path]].
+    * v3: every doc ships in THREE framings — classic doc_NNN.pdf, the
     * PDF 1.5 doc15_NNN.pdf (xref stream + ObjStm), and docp_NNN.pdf
     * ([[pdfPrevBytes]]: Predictor-12 Flate xref streams + a /Prev
     * incremental update) — so the gate covers the real-writer 1.5+
     * path, not just PdfSpec. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"doc_$i%03d.pdf").toPath, pdfBytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"doc15_$i%03d.pdf").toPath, pdf15Bytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"docp_$i%03d.pdf").toPath, pdfPrevBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      Dirs.write(tmp, f"doc_$i%03d.pdf", pdfBytes(i))
+      Dirs.write(tmp, f"doc15_$i%03d.pdf", pdf15Bytes(i))
+      Dirs.write(tmp, f"docp_$i%03d.pdf", pdfPrevBytes(i))
     }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

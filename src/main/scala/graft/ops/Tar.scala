@@ -422,33 +422,11 @@ object TarFixture {
         s"sample_${i}_$k.cls" -> clsOf(i, k).getBytes("US-ASCII"))
     })
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[Mp3Fixture.ensure]] (content-keyed, tmp+rename). */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"shard_$i%03d.tar").toPath, tarBytes(i))
-      }
-      val pax = new java.io.File(tmp, "pax")
-      pax.mkdirs()
-      (0 until paxCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(pax, f"paxshard_$i%03d.tar").toPath,
-          paxTarBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  /** Build the fixture if missing ([[Dirs.buildOnce]]); returns [[path]]. */
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach(i => Dirs.write(tmp, f"shard_$i%03d.tar", tarBytes(i)))
+    (0 until paxCount).foreach { i =>
+      Dirs.write(tmp, f"pax/paxshard_$i%03d.tar", paxTarBytes(i))
     }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

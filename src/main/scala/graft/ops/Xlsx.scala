@@ -289,25 +289,10 @@ object XlsxFixture {
       "xl/worksheets/sheet1.xml" -> sheetXml(i)),
       stored)
 
-  /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"wb_$i%03d.xlsx").toPath, workbookBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  /** Build the fixture if missing ([[Dirs.buildOnce]]); returns [[path]]. */
+  def ensure(): String = Dirs.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      Dirs.write(tmp, f"wb_$i%03d.xlsx", workbookBytes(i))
     }
-    path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

@@ -385,8 +385,7 @@ object MultimodalQueries {
     * ([[graft.ops.Jpeg.parseMeta]] — multi-table DQT/DHT, 16-bit
     * precision; r14 extends the census to PROGRESSIVE streams — the
     * fixture now carries real JDK-encoded SOF2 files, flagged in the
-    * `progressive`/`n_scans` columns, while pixel decode keeps refusing
-    * them with the marker name), and the oracle re-reads
+    * `progressive`/`n_scans` columns), and the oracle re-reads
     * the same fields from the same bytes with a RECURSIVE hex segment
     * walk — dimensions, per-component sampling factors, quant-table
     * census and the luma table's 64-entry sum (the quality fingerprint)
@@ -395,9 +394,9 @@ object MultimodalQueries {
     * scans; one 8-bit table per DQT/DHT segment — the oracle's
     * per-segment arithmetic leans on that actual layout exactly as the
     * PNG oracle leans on its stored-block zlib, while the ENGINE parses
-    * the general format). The full Huffman+IDCT pixel decode is
-    * JpegSpec's differential against the JDK's independent libjpeg
-    * codec (gray ±1, RGB ±3 with mean ≲0.1). */
+    * the general format). Scan data is never decoded; JpegSpec holds
+    * the census's geometry and progressive flag to the JDK's own
+    * reader. */
   val qMediaJpeg = Q("q_media_jpeg",
     (s, _) => {
       val dir = graft.ops.JpegFixture.ensure()
@@ -474,7 +473,7 @@ object MultimodalQueries {
       |JOIN dhtn h USING (file_name) JOIN sos s USING (file_name)
       |JOIN nseg g USING (file_name) JOIN scans n USING (file_name)""".stripMargin),
     "north star: REAL JPEG header decode (recursive marker-segment walk, " +
-      "hex-domain oracle); pixel path is JpegSpec's JDK differential")
+      "hex-domain oracle; no pixel decode, like the reference)")
 
   /** q_media_mp3 — REAL MPEG-1 Layer III frame census in the gate
     * (VERDICT r12 next-round #3): the engine hops frame-length by
@@ -482,9 +481,9 @@ object MultimodalQueries {
     * ([[graft.ops.Mp3]] — sync word checked at every landing, exact EOF
     * landing required, free-format/reserved indices refused), and the
     * oracle replays the identical walk as a RECURSIVE hex expression over
-    * the same bytes. Audio-sample decode stays the documented stand-in:
-    * the JDK ships no MPEG-audio decoder to differential against (unlike
-    * PNG/JPEG), so the honest boundary is the header domain. */
+    * the same bytes. Samples are never decoded (the reference passes
+    * audio blobs through as opaque payloads); [[qMp3Side]] reads the
+    * side-info layer below the frame headers. */
   val qMediaMp3 = Q("q_media_mp3", {
       // inline LUT expansions shared by the recursive step and the
       // per-frame projection (generated once, pasted where needed)
@@ -533,11 +532,10 @@ object MultimodalQueries {
     "north star: REAL MP3 frame census (sync walk, bitrate/samplerate " +
       "tables, padding-aware lengths; recursive hex oracle)")
 
-  /** q_mp3_sideinfo — the DECODE bitstream layer in the gate (r18,
-    * alongside [[graft.ops.Mp3Pcm]]'s sample-exactness spec): the
-    * engine runs the REAL side-info parse the sample decoder uses
-    * (main_data_begin, scfsi, both granules' part2_3/big_values/gain/
-    * window-switching branch fields) over the PCM fixture — which
+  /** q_mp3_sideinfo — the side-info bitstream layer in the gate: the
+    * engine runs the REAL side-info parse ([[graft.ops.Mp3Pcm]]:
+    * main_data_begin, scfsi, both granules' part2_3/big_values/gain/
+    * window-switching branch fields) over the bit-packed fixture — which
     * exercises every branch: block types 0..3, scfsi reuse, a nonzero
     * reservoir — and the oracle re-reads every field with fixed-offset
     * BIT arithmetic over the same 17 side-info bytes (mono layout:
@@ -602,9 +600,8 @@ object MultimodalQueries {
       |  CAST(${gb(58, 1)} AS INTEGER) AS count1_table
       |FROM fr, unnest(generate_series(0, 1)) AS gg(g)""".stripMargin
     },
-    "north star: the MP3 decoder's side-info parse oracle-checked bit " +
-      "by bit (fixed-offset hex arithmetic; samples are Mp3PcmSpec's " +
-      "generator differential)")
+    "north star: the MP3 side-info parse oracle-checked bit by bit " +
+      "(fixed-offset hex arithmetic; samples are not decoded)")
 
   /** q_media_gif — REAL GIF structure census in the gate (r17): the
     * engine walks the full block grammar ([[graft.ops.Gif]] — logical
@@ -615,9 +612,8 @@ object MultimodalQueries {
     * same bytes with a recursive hex STATE MACHINE (st 0 = at a block
     * introducer, st 1 = hopping length-prefixed sub-blocks) that
     * skips the LZW payloads structurally — the census never reads
-    * them. Frame-0 pixel decode (GIF-LZW, palette, deinterlace) is
-    * GifSpec's differential against `ImageIO.read` at exact equality
-    * (the JPEG pixel-path split). */
+    * them. The engine's GIF-LZW pass (palette, deinterlace) is
+    * GifSpec's differential against `ImageIO.read` at exact equality. */
   val qMediaGif = Q("q_media_gif",
     (s, _) => {
       val dir = graft.ops.GifFixture.ensure()
@@ -676,7 +672,7 @@ object MultimodalQueries {
       |FROM gwalk WHERE st = 0 AND ${hB("pos")} = 59
       |ORDER BY file_name""".stripMargin),
     "north star: REAL GIF block-structure census over the JDK encoder's " +
-      "own bytes (recursive hex state machine; GIF-LZW pixel decode is " +
+      "own bytes (recursive hex state machine; GIF-LZW indices are " +
       "GifSpec's ImageIO differential)")
 
   def all: Seq[Q] = Seq(qMediaMeta, qMediaFrames, qMediaFeatures,

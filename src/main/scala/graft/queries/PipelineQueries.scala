@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{ManifestSynth, Q, RfpSynth, Tables}
-import graft.ops.{Clean, Dedup, Keys, Render}
+import graft.ops.{Clean, Dedup, Dirs, Keys, Render}
 
 /** Pipeline-stage queries beyond the cleaning core: document rendering
   * (S9/P15/S10/P16), latest-file selection (S5/S6/T2/A10), manifest-shaped
@@ -539,11 +539,6 @@ object PipelineQueries {
     "ref commercial_rfp_raw_data_ingestion_and_cleaning.py:286 (S1/S2): " +
       "real .xlsx bytes -> table, oracle re-parses the same bytes in SQL")
 
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(); ()
-  }
-
   /** Dirs this JVM has registered an exit-time delete for (idempotent —
     * the query body runs many times per session, the hook must not). */
   private val cleanupRegistered =
@@ -553,7 +548,7 @@ object PipelineQueries {
     * than one hour (crashed sessions whose hook never ran). */
   private def sweepStaleAndRegisterCleanup(own: java.io.File): Unit = {
     if (cleanupRegistered.add(own.getAbsolutePath)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(own)))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => Dirs.deleteRec(own)))
       val prefix = own.getName.split('_').init.mkString("_") + "_"
       val cutoff = System.currentTimeMillis() - 3600 * 1000L
       Option(own.getParentFile.listFiles()).getOrElse(Array.empty).foreach {
@@ -561,7 +556,7 @@ object PipelineQueries {
           if (sib.isDirectory && sib.getName.startsWith(prefix) &&
               sib.getAbsolutePath != own.getAbsolutePath &&
               sib.lastModified() < cutoff)
-            deleteRec(sib)
+            Dirs.deleteRec(sib)
       }
     }
   }
@@ -604,7 +599,7 @@ object PipelineQueries {
       // age-gated at one hour so a LIVE concurrent run's dir (written
       // minutes ago at most) is never pulled out from under it.
       sweepStaleAndRegisterCleanup(new java.io.File(out))
-      deleteRec(new java.io.File(out)) // S11 truncate-then-write semantics
+      Dirs.deleteRec(new java.io.File(out)) // S11 truncate-then-write semantics
       graft.ops.Docx.writeDocx(lib, "file_name", "doc_text", out,
         stored = true)
       graft.ops.Docx.readDocs(
@@ -1245,7 +1240,7 @@ object PipelineQueries {
           dir.getBytes("UTF-8")).toString.take(8) +
           "_" + s.sparkContext.applicationId).getAbsolutePath
       sweepStaleAndRegisterCleanup(new java.io.File(out))
-      deleteRec(new java.io.File(out)) // S11 truncate-then-write semantics
+      Dirs.deleteRec(new java.io.File(out)) // S11 truncate-then-write semantics
       graft.ops.Tar.writeShards(members, "m_name", "m_text", out)
       graft.ops.Tar.scanTar(
           s.read.format("binaryFile").load(out + "/*.tar"))

@@ -1351,10 +1351,6 @@ object SimilarityQueries {
   def annIvfSq(s: SparkSession, dir: String, nprobe: Int): DataFrame =
     annIvfSqCells(Tables.embeddings(s, dir), nprobe, ivfCells, 1000)
 
-  /** Pinned-cells [[annIvfSq]] over any frame ([[graft.IvfScale]]). */
-  def annIvfSqOn(emb: DataFrame, nprobe: Int): DataFrame =
-    annIvfSqCells(emb, nprobe, ivfCells, 1000)
-
   /** The √n-cells production shape of [[annIvfSq]]: cells grow with the
     * corpus (`max(ivfCells, round(√n))`) so per-query candidate volume —
     * ~`nprobe·n/cells ≈ nprobe·√n` — grows SUBLINEARLY while the pinned
@@ -1875,6 +1871,25 @@ object SimilarityQueries {
        |FROM xtop x LEFT JOIN ${prefix}top a
        |  ON a.query_id = x.query_id AND a.nbr_id = x.nbr_id""".stripMargin
 
+  /** Await both futures before surfacing either failure, so a failed
+    * first future cannot leave the second running detached. When both
+    * fail, the first's exception is rethrown carrying the second's as a
+    * suppressed cause. */
+  private[graft] def awaitBoth[A, B](a: scala.concurrent.Future[A],
+      b: scala.concurrent.Future[B]): (A, B) = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    import scala.util.{Failure, Try}
+    val ta = Try(Await.result(a, Duration.Inf))
+    val tb = Try(Await.result(b, Duration.Inf))
+    (ta, tb) match {
+      case (Failure(ea), Failure(eb)) =>
+        if (ea ne eb) ea.addSuppressed(eb)
+        throw ea
+      case _ => (ta.get, tb.get)
+    }
+  }
+
   /** q_ann_recall — the ANN quality metric the index ladder is judged by:
     * recall@3 = |ANN top-3 ∩ exact top-3| / 3, averaged over the capped
     * query set, one row per method (lsh / mp / ivf). Every exact top-3
@@ -1919,8 +1934,7 @@ object SimilarityQueries {
     // trainer's driver-side rounds back-fill the exact pass's tail
     // instead of waiting behind it (the same concurrency discipline as
     // qAnnRecall's two fixture sides, one level down).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.{ExecutionContext, Future}
     // r19 (ADVICE r18): a DEDICATED 2-thread pool instead of the global
     // EC — its threads are created at first submit FROM THIS THREAD, so
     // Spark's InheritableThreadLocal local properties (job description/
@@ -1951,9 +1965,7 @@ object SimilarityQueries {
         KMeans.trainMany(base.select("vec_id", "v"),
           (0, embDims) +: pqSlices, ivfCells, ivfIters))
     }
-    val exactT = scala.util.Try(Await.result(exactF, Duration.Inf))
-    val trainedT = scala.util.Try(Await.result(trainedF, Duration.Inf))
-    (exactT.get, trainedT.get)
+    awaitBoth(exactF, trainedF)
     } finally pool.shutdown()
     val (coarse, books) = (trained.head, trained.tail)
     def recallOf(method: String, ann: DataFrame): DataFrame =

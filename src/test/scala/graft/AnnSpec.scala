@@ -126,4 +126,24 @@ class AnnSpec extends SparkSpec {
         s"$name rank-1 beat the exact scan — impossible")
     }
   }
+
+  test("q_ann_recall's paired await rethrows one failure carrying both " +
+      "causes") {
+    import scala.concurrent.{ExecutionContext, Future}
+    import graft.queries.SimilarityQueries.awaitBoth
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val exactErr = new IllegalStateException("exact pass failed")
+    val trainErr = new IllegalArgumentException("trainer failed")
+    val e = intercept[IllegalStateException] {
+      awaitBoth(Future[Int](throw exactErr), Future[Int](throw trainErr))
+    }
+    assert(e eq exactErr)
+    assert(e.getSuppressed.toSeq === Seq(trainErr))
+    // one failure passes through alone; two successes pair up
+    val e2 = intercept[IllegalArgumentException] {
+      awaitBoth(Future(1), Future[Int](throw trainErr))
+    }
+    assert(e2 eq trainErr)
+    assert(awaitBoth(Future(1), Future("a")) === ((1, "a")))
+  }
 }

@@ -4,6 +4,14 @@ import graft.ops.{Gif, GifFixture}
 
 class GifSpec extends SparkSpec {
 
+  /** Packed 0xRRGGBB of a decoded frame's pixel through its palette —
+    * what `ImageIO`'s reader hands back for the same frame. */
+  private def rgbOf(fr: Gif.Frame, x: Int, y: Int): Int = {
+    val i3 = 3 * fr.indices(y * fr.w + x)
+    ((fr.palette(i3) & 0xff) << 16) | ((fr.palette(i3 + 1) & 0xff) << 8) |
+      (fr.palette(i3 + 2) & 0xff)
+  }
+
   test("census matches the JDK-written fixture structure") {
     for (i <- 0 until GifFixture.count) {
       val (m, frames) = Gif.parse(f"img_$i%03d.gif", GifFixture.gifBytes(i))
@@ -23,10 +31,10 @@ class GifSpec extends SparkSpec {
       val bytes = GifFixture.gifBytes(i)
       val ref = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(bytes))
-      val (w, h, rgb) = Gif.decodeFrame0(s"img_$i.gif", bytes)
-      assert(w === ref.getWidth && h === ref.getHeight, s"i=$i")
-      for (x <- 0 until w; y <- 0 until h)
-        assert(rgb(y * w + x) === (ref.getRGB(x, y) & 0xffffff),
+      val fr = Gif.parse(s"img_$i.gif", bytes)._2.head
+      assert(fr.w === ref.getWidth && fr.h === ref.getHeight, s"i=$i")
+      for (x <- 0 until fr.w; y <- 0 until fr.h)
+        assert(rgbOf(fr, x, y) === (ref.getRGB(x, y) & 0xffffff),
           s"i=$i ($x,$y) interlaced=${GifFixture.interlacedOf(i)}")
     }
   }
@@ -45,12 +53,9 @@ class GifSpec extends SparkSpec {
         val ref = rd.read(f)
         assert(fr.w === ref.getWidth && fr.h === ref.getHeight,
           s"i=$i f=$f")
-        for (x <- 0 until fr.w; y <- 0 until fr.h) {
-          val i3 = 3 * fr.indices(y * fr.w + x)
-          val got = ((fr.palette(i3) & 0xff) << 16) |
-            ((fr.palette(i3 + 1) & 0xff) << 8) | (fr.palette(i3 + 2) & 0xff)
-          assert(got === (ref.getRGB(x, y) & 0xffffff), s"i=$i f=$f ($x,$y)")
-        }
+        for (x <- 0 until fr.w; y <- 0 until fr.h)
+          assert(rgbOf(fr, x, y) === (ref.getRGB(x, y) & 0xffffff),
+            s"i=$i f=$f ($x,$y)")
       }
       rd.dispose()
     }

@@ -2,13 +2,10 @@ package graft
 
 import graft.ops.{Jpeg, JpegFixture}
 
-/** The JPEG codec's differential proof (the PNG discipline): the pixel
-  * decoder round-trips `javax.imageio`'s OWN encoder output against the
-  * JDK's independent libjpeg-based decoder, and the marker walk matches
-  * the fixture formulas. Tolerances: ±1 per sample on gray (pure IDCT
-  * rounding — T.83 grants DCT decoders ±1), ±3 on RGB (the luma and
-  * chroma ±1s amplify through the conversion coefficients; measured max
-  * is 3 across the fixture, mean ≲ 0.1). */
+/** The JPEG header census against two independent references: the
+  * fixture formulas, and the JDK's own reader (`javax.imageio`), whose
+  * native metadata tree reports the frame header (geometry, components,
+  * sampling factors, SOF process) of the same bytes. */
 class JpegSpec extends SparkSpec {
 
   test("marker walk matches the fixture formulas (all files)") {
@@ -34,6 +31,7 @@ class JpegSpec extends SparkSpec {
         }
       }
       assert(m.entropy_bytes > 0 && m.dqt_luma_sum > 0)
+      assert(census(m) === jdkCensus(JpegFixture.jpegBytes(i)), s"file $i")
     }
     // quality is monotone in the quant table: same layout, higher q ->
     // smaller quantizers -> smaller table sum (i=1 q=0.60 vs i=7 q=0.90,
@@ -43,83 +41,16 @@ class JpegSpec extends SparkSpec {
     assert(hi.dqt_luma_sum < lo.dqt_luma_sum)
   }
 
-  test("gray pixel decode matches the JDK decoder within +-1 (IDCT rounding)") {
-    // r15: progressive files are no longer excluded — SOF2 decode runs
-    // the same differential at the same tolerance
-    for (i <- 0 until JpegFixture.count if JpegFixture.isGray(i)) {
-      val bytes = JpegFixture.jpegBytes(i)
-      val (w, h, planes) = Jpeg.decodePlanes(s"g$i", bytes)
-      assert(planes.size === 1)
-      val (_, _, pw, _, y) = planes.head
-      val ref = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      assert(ref.getWidth === w && ref.getHeight === h)
-      var maxd = 0
-      for (yy <- 0 until h; xx <- 0 until w) {
-        // raster samples, not getRGB: TYPE_BYTE_GRAY's getRGB applies a
-        // colorspace (gamma) conversion that is not part of the codec
-        val d = math.abs(ref.getRaster.getSample(xx, yy, 0) - y(yy * pw + xx))
-        maxd = math.max(maxd, d)
-      }
-      assert(maxd <= 1, s"file $i: gray maxdiff $maxd")
-    }
-  }
-
-  test("color pixel decode (4:2:0 fancy upsample + fixed-point YCbCr) " +
-      "matches the JDK decoder within +-2") {
-    for (i <- 0 until JpegFixture.count if !JpegFixture.isGray(i)) {
-      val bytes = JpegFixture.jpegBytes(i)
-      val (w, h, rgb) = Jpeg.decodeRgb(s"c$i", bytes)
-      val ref = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      assert(ref.getWidth === w && ref.getHeight === h)
-      var maxd = 0; var sumd = 0L
-      for (yy <- 0 until h; xx <- 0 until w) {
-        val a = ref.getRGB(xx, yy); val b = rgb(yy * w + xx)
-        for (sh <- Seq(16, 8, 0)) {
-          val d = math.abs(((a >> sh) & 0xff) - ((b >> sh) & 0xff))
-          maxd = math.max(maxd, d); sumd += d
-        }
-      }
-      // +-3, not +-2: the luma's +-1 IDCT rounding and the chroma's +-1
-      // amplify through the conversion coefficients (1.772 on blue), so
-      // isolated pixels can land 3 off; the mean bound keeps the test
-      // sharp (a wrong upsample or color matrix reads 5-60x this)
-      assert(maxd <= 3, s"file $i: rgb maxdiff $maxd")
-      val mean = sumd.toDouble / (3L * w * h)
-      assert(mean <= 0.2, s"file $i: rgb meandiff $mean")
-    }
-  }
-
-  test("progressive JPEG: census reads it, pixel decode matches the JDK") {
-    // the JDK encoder CAN write progressive — and since r15 the decoder
-    // runs the full §G successive-approximation algorithm, so the SOF2
-    // stream goes through the same differential as baseline: decodeRgb
-    // against the JDK's own decoder at the color tolerance
+  test("progressive JPEG: census reads it, truncated input refuses") {
     import java.awt.image.BufferedImage
     val img = new BufferedImage(24, 16, BufferedImage.TYPE_3BYTE_BGR)
     for (x <- 0 until 24; y <- 0 until 16)
       img.setRGB(x, y, JpegFixture.rgbOf(0, x, y))
-    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-    val p = wr.getDefaultWriteParam
-    p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-    val bo = new java.io.ByteArrayOutputStream()
-    wr.setOutput(new javax.imageio.stream.MemoryCacheImageOutputStream(bo))
-    wr.write(null, new javax.imageio.IIOImage(img, null, null), p)
-    wr.dispose()
-    val prog = bo.toByteArray
+    val prog = jdkEncode(img, progressive = true)
     val m = Jpeg.parseMeta("prog.jpg", prog)
     assert(m.progressive && m.width === 24 && m.height === 16)
     assert(m.n_scans > 1, "a JDK progressive stream has multiple scans")
-    val (w2, h2, rgb) = Jpeg.decodeRgb("prog.jpg", prog)
-    val ref = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(prog))
-    assert(w2 === 24 && h2 === 16)
-    var maxd = 0
-    for (yy <- 0 until h2; xx <- 0 until w2; sh <- Seq(16, 8, 0))
-      maxd = math.max(maxd, math.abs(
-        ((ref.getRGB(xx, yy) >> sh) & 0xff) - ((rgb(yy * w2 + xx) >> sh) & 0xff)))
-    assert(maxd <= 3, s"progressive rgb maxdiff $maxd")
+    assert(census(m) === jdkCensus(prog))
     val trunc = JpegFixture.jpegBytes(0).take(40)
     val e3 = intercept[IllegalArgumentException] {
       Jpeg.parseMeta("t.jpg", trunc)
@@ -168,11 +99,9 @@ class JpegSpec extends SparkSpec {
 
   test("odd-dimension differential: partial MCUs, gray+color, " +
       "baseline+progressive") {
-    // progressive decoders break first at the edges: partial MCUs at
-    // the right/bottom, and the NON-INTERLEAVED ceil(size/8) block
-    // grids of single-component AC scans diverging from the MCU-padded
-    // storage grid. Every (dims, gray/color, baseline/progressive)
-    // cell runs the same JDK differential as the fixture tests.
+    // partial MCUs at the right/bottom edge and single-pixel frames:
+    // every (dims, gray/color, baseline/progressive) cell's census must
+    // equal what the JDK reader reports for the same bytes
     import java.awt.image.BufferedImage
     for ((w, h) <- Seq((1, 1), (7, 3), (8, 8), (9, 17), (31, 15),
            (33, 34));
@@ -189,43 +118,16 @@ class JpegSpec extends SparkSpec {
           else (v << 16) | (((x * 11 + y * 5) % 256) << 8) |
             ((255 - v) & 0xff))
       }
-      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg")
-        .next()
-      val p = wr.getDefaultWriteParam
-      if (progressive)
-        p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-      val bo = new java.io.ByteArrayOutputStream()
-      wr.setOutput(new javax.imageio.stream.MemoryCacheImageOutputStream(bo))
-      wr.write(null, new javax.imageio.IIOImage(img, null, null), p)
-      wr.dispose()
-      val bytes = bo.toByteArray
+      val bytes = jdkEncode(img, progressive)
       val tag = s"${w}x$h gray=$gray prog=$progressive"
-      val ref = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (gray) {
-        val (w2, h2, planes) = Jpeg.decodePlanes(tag, bytes)
-        assert(w2 === w && h2 === h, tag)
-        val (_, _, pw, _, y2) = planes.head
-        var maxd = 0
-        for (yy <- 0 until h; xx <- 0 until w)
-          maxd = math.max(maxd, math.abs(
-            ref.getRaster.getSample(xx, yy, 0) - y2(yy * pw + xx)))
-        assert(maxd <= 1, s"$tag: gray maxdiff $maxd")
-      } else {
-        val (w2, h2, rgb) = Jpeg.decodeRgb(tag, bytes)
-        assert(w2 === w && h2 === h, tag)
-        var maxd = 0
-        for (yy <- 0 until h; xx <- 0 until w; sh <- Seq(16, 8, 0))
-          maxd = math.max(maxd, math.abs(
-            ((ref.getRGB(xx, yy) >> sh) & 0xff) -
-              ((rgb(yy * w + xx) >> sh) & 0xff)))
-        assert(maxd <= 3, s"$tag: rgb maxdiff $maxd")
-      }
+      val m = Jpeg.parseMeta(tag, bytes)
+      assert(census(m) === jdkCensus(bytes), tag)
+      assert((m.width, m.height, m.n_components, m.progressive) ===
+        ((w, h, if (gray) 1 else 3, progressive)), tag)
     }
   }
 
-  test("4:2:2 pixel path matches the JDK (h2v1 fancy upsample); " +
-      "4:1:1 refuses") {
+  test("census sampling factors match the JDK reader: 4:2:2, 4:4:0, 4:1:1") {
     import java.awt.image.BufferedImage
     def paint(w: Int, h: Int): BufferedImage = {
       val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
@@ -233,58 +135,54 @@ class JpegSpec extends SparkSpec {
         img.setRGB(x, y, JpegFixture.rgbOf(1, x, y))
       img
     }
-    // odd widths make the chroma plane's ceil-width edge load-bearing
-    for ((w, h) <- Seq((8, 8), (9, 17), (24, 16), (31, 15), (33, 34))) {
-      val bytes = encodeSampled(paint(w, h), 2, 1)
-      val tag = s"${w}x$h 422"
+    for (((hs, vs), samp) <- Seq((2, 1) -> "2x1,1x1,1x1",
+           (1, 2) -> "1x2,1x1,1x1", (4, 1) -> "4x1,1x1,1x1");
+         (w, h) <- Seq((8, 8), (9, 17), (31, 15))) {
+      val bytes = encodeSampled(paint(w, h), hs, vs)
+      val tag = s"${w}x$h ${hs}x$vs"
       val m = Jpeg.parseMeta(tag, bytes)
-      assert(m.samp === "2x1,1x1,1x1", s"$tag: writer emitted ${m.samp}")
-      val ref = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      val (w2, h2, rgb) = Jpeg.decodeRgb(tag, bytes)
-      assert(w2 === w && h2 === h, tag)
-      var maxd = 0
-      for (yy <- 0 until h; xx <- 0 until w; sh <- Seq(16, 8, 0))
-        maxd = math.max(maxd, math.abs(
-          ((ref.getRGB(xx, yy) >> sh) & 0xff) -
-            ((rgb(yy * w + xx) >> sh) & 0xff)))
-      assert(maxd <= 3, s"$tag: rgb maxdiff $maxd")
+      assert(m.samp === samp, s"$tag: writer emitted ${m.samp}")
+      assert(census(m) === jdkCensus(bytes), tag)
     }
-    // a genuinely unsupported grid (4:1:1, 4x1 luma) still refuses
-    val b411 = encodeSampled(paint(24, 16), 4, 1)
-    assert(Jpeg.parseMeta("411.jpg", b411).samp === "4x1,1x1,1x1")
-    val e = intercept[IllegalArgumentException] {
-      Jpeg.decodeRgb("411.jpg", b411)
-    }
-    assert(e.getMessage.contains("unsupported chroma geometry"))
   }
 
-  test("4:4:0 pixel path matches the JDK (h1v2 fancy upsample)") {
-    import java.awt.image.BufferedImage
-    def paint(w: Int, h: Int): BufferedImage = {
-      val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-      for (x <- 0 until w; y <- 0 until h)
-        img.setRGB(x, y, JpegFixture.rgbOf(2, x, y))
-      img
-    }
-    // odd heights make the chroma plane's ceil-height edge load-bearing
-    for ((w, h) <- Seq((8, 8), (17, 9), (16, 24), (15, 31), (34, 33))) {
-      val bytes = encodeSampled(paint(w, h), 1, 2)
-      val tag = s"${w}x$h 440"
-      val m = Jpeg.parseMeta(tag, bytes)
-      assert(m.samp === "1x2,1x1,1x1", s"$tag: writer emitted ${m.samp}")
-      val ref = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      val (w2, h2, rgb) = Jpeg.decodeRgb(tag, bytes)
-      assert(w2 === w && h2 === h, tag)
-      var maxd = 0
-      for (yy <- 0 until h; xx <- 0 until w; sh <- Seq(16, 8, 0))
-        maxd = math.max(maxd, math.abs(
-          ((ref.getRGB(xx, yy) >> sh) & 0xff) -
-            ((rgb(yy * w + xx) >> sh) & 0xff)))
-      info(s"$tag maxdiff $maxd")
-      assert(maxd <= 3, s"$tag: rgb maxdiff $maxd")
-    }
+  /** The census fields the JDK reader also reports. */
+  private def census(m: graft.ops.JpegMeta) =
+    (m.width, m.height, m.n_components, m.progressive, m.samp)
+
+  /** The same fields as the JDK reader sees them: image geometry plus
+    * the SOF marker of its native metadata tree (process 2 = SOF2). */
+  private def jdkCensus(bytes: Array[Byte]) = {
+    import org.w3c.dom.Element
+    val rd = javax.imageio.ImageIO.getImageReadersByFormatName("jpg").next()
+    try {
+      rd.setInput(javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes)))
+      val tree = rd.getImageMetadata(0)
+        .getAsTree("javax_imageio_jpeg_image_1.0").asInstanceOf[Element]
+      val sof = tree.getElementsByTagName("sof").item(0).asInstanceOf[Element]
+      val comps = sof.getElementsByTagName("componentSpec")
+      val samp = (0 until comps.getLength).map { k =>
+        val c = comps.item(k).asInstanceOf[Element]
+        s"${c.getAttribute("HsamplingFactor")}x${c.getAttribute("VsamplingFactor")}"
+      }.mkString(",")
+      (rd.getWidth(0), rd.getHeight(0), comps.getLength,
+        sof.getAttribute("process") == "2", samp)
+    } finally rd.dispose()
+  }
+
+  /** JDK-encode at the default quality, optionally progressive. */
+  private def jdkEncode(img: java.awt.image.BufferedImage,
+      progressive: Boolean): Array[Byte] = {
+    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
+    val p = wr.getDefaultWriteParam
+    if (progressive)
+      p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+    val bo = new java.io.ByteArrayOutputStream()
+    wr.setOutput(new javax.imageio.stream.MemoryCacheImageOutputStream(bo))
+    wr.write(null, new javax.imageio.IIOImage(img, null, null), p)
+    wr.dispose()
+    bo.toByteArray
   }
 
   /** JDK-encode with explicit luma sampling factors via the native

@@ -2,31 +2,35 @@ package graft
 
 import graft.ops._
 
-/** The MP3 sample-decode differential (see [[graft.ops.Mp3Pcm]]): the
-  * fixture PACKS real Layer III streams bit by bit and predicts the
-  * exact Q16 PCM from the logical spectral content; the decoder must
-  * reproduce every sample exactly, across every file class (window
-  * ladder, short blocks, scfsi reuse, table-0 regions, bit reservoir). */
+/** The MP3 side-info census (see [[graft.ops.Mp3Pcm]]) against the
+  * fixture that PACKS real Layer III streams bit by bit: every side-info
+  * field the parse reads back must equal the content script the encoder
+  * wrote, across every file class (window ladder, short blocks, scfsi
+  * reuse, table-0 regions, bit reservoir). */
 class Mp3PcmSpec extends SparkSpec {
 
-  test("decoded Q16 samples equal the generator's prediction EXACTLY " +
-      "(all files, all classes)") {
-    for (i <- 0 until Mp3PcmFixture.count) {
-      val name = f"pcm_$i%03d.mp3"
-      val bytes = Mp3PcmFixture.mp3Bytes(i)
-      val (row, got) = Mp3Pcm.decodeFile(name, bytes)
-      val want = Mp3PcmFixture.expectedQ16(i)
-      assert(row.n_frames === Mp3PcmFixture.framesOf(i).toLong)
-      assert(row.n_samples === Mp3PcmFixture.framesOf(i) * 1152L)
-      assert(got.length === want.length)
-      got.indices.find(k => got(k) != want(k)).foreach { k =>
-        fail(s"file $i: first sample mismatch at $k: " +
-          s"got ${got(k)}, want ${want(k)}")
-      }
-      // the streams are not degenerate: spectral content must reach PCM
-      assert(got.exists(_ != 0L), s"file $i decoded to silence")
+  /** The side-info fields the content script fixes, per frame-granule:
+    * (frame, granule, mdb, scfsi mask, big_values, global_gain, sfc, ws,
+    * block_type, region0, region1, preflag, sf_scale, count1_table).
+    * part2_3_length is the encoder's measured bit count, so it is only
+    * checked for being positive. */
+  private def expectedSide(i: Int): Seq[Seq[Int]] = {
+    val mask = Mp3PcmFixture.scfsiOf(i).foldLeft(0)((m, b) => (m << 1) | b)
+    for (f <- 0 until Mp3PcmFixture.framesOf(i);
+         (sc, g) <- Mp3PcmFixture.frameScripts(i, f).toSeq.zipWithIndex)
+    yield {
+      val mdb = if (i % 5 == 4 && f >= 1) 7 else 0
+      val long = sc.bt == 0
+      Seq(f, g, mdb, mask, sc.bigEnd / 2, sc.gg, sc.sfc,
+        if (long) 0 else 1, sc.bt, if (long) sc.r0c else 0,
+        if (long) sc.r1c else 0, sc.pre, sc.ss, 1)
     }
   }
+
+  private def fields(r: Mp3SideRow): Seq[Int] =
+    Seq(r.frame_idx, r.granule, r.mdb, r.scfsi_mask, r.big_values,
+      r.global_gain, r.sfc, r.ws, r.block_type, r.region0, r.region1,
+      r.preflag, r.sf_scale, r.count1_table)
 
   test("the class-4 reservoir really runs: frames after the first carry " +
       "main_data_begin = 7 and still decode exactly") {
@@ -41,6 +45,10 @@ class Mp3PcmSpec extends SparkSpec {
     assert(mdb0 === 0)
     assert(mdb1 === 7, "the reservoir delta must appear in the side info")
     assert(scfsi.toSeq === Seq(1, 0, 1, 0), "class 4 pins scfsi reuse")
+    // every frame's side info reads back exactly as scripted
+    val rows = Mp3Pcm.sideRows("r.mp3", bytes)
+    assert(rows.map(fields) === expectedSide(i))
+    assert(rows.forall(_.part23 > 0))
   }
 
   test("Huffman registry integrity: table 1 is a complete prefix code; " +
@@ -53,58 +61,34 @@ class Mp3PcmSpec extends SparkSpec {
       if (la <= lb)
         assert((cb >> (lb - la)) != ca, s"$a prefixes $b")
     }
-    // every (v,w,x,y) in {-1,0,1}^4 with |.|<=1 survives pack -> parse
+    // every (v,w,x,y) in {-1,0,1}^4 survives pack -> parse: 4 bits of
+    // one's-complemented magnitudes, then one sign bit per nonzero value
     for (v <- -1 to 1; x <- -1 to 1; y <- -1 to 1; z <- -1 to 1) {
       val w = new Mp3BitWriter
       Mp3Huff.encodeQuadB(w, math.abs(v), math.abs(x), math.abs(y),
         math.abs(z))
       Seq(v, x, y, z).foreach(t => if (t != 0) w.put(if (t < 0) 1 else 0, 1))
       val r = new Mp3BitReader(w.toBytes, "quad")
-      val (dv, dx, dy, dz) = Mp3Huff.decodeQuadB(r)
-      val signed = Seq(dv, dx, dy, dz).map { m =>
+      val n = ~r.bits(4) & 0xF
+      val signed = Seq(n >> 3, n >> 2, n >> 1, n).map(_ & 1).map { m =>
         if (m != 0 && r.bits(1) == 1) -m else m
       }
       assert(signed === Seq(v, x, y, z))
     }
   }
 
-  test("polyphase structure: a subband impulse lands through the exact " +
-      "N-matrixing and the U/W gather the spec prescribes") {
-    for (k0 <- Seq(0, 5, 31)) {
-      val st = new Mp3SynthState
-      val s = new Array[Long](32)
-      s(k0) = 1L << 16
-      val out = st.polyphaseStep(s)
-      // expected: V(i) = rs(N(i,k0) * 2^16, 30) for i < 64 and zero
-      // above (fresh state), so of the 16 window terms only the b=0
-      // gather U(j) = V(j) survives: out(j) = rs(V(j)*D(j), 30)
-      def v(i: Int) = Mp3Fixed.rs(Mp3Fixed.nMatQ(i)(k0) * 65536L, 30)
-      for (j <- 0 until 32) {
-        val want = Mp3Fixed.rs(v(j) * Mp3Fixed.dWinQ(j), 30)
-        assert(out(j) === want, s"impulse k=$k0 sample $j")
-      }
-      // a second step shifts that V down by 64: now the b=1 gather term
-      // U(32+j) = V(96+j) = old V(32+j) joins in
-      val out2 = st.polyphaseStep(new Array[Long](32))
-      for (j <- 0 until 32) {
-        val want = Mp3Fixed.rs(v(32 + j) * Mp3Fixed.dWinQ(32 + j), 30)
-        assert(out2(j) === want, s"impulse step-2 k=$k0 sample $j")
-      }
-    }
-  }
-
   test("refusals are loud: stereo, unregistered Huffman tables, mixed " +
-      "blocks, count1 table A, truncated tails") {
+      "blocks, truncated tails") {
     val good = Mp3PcmFixture.mp3Bytes(0)
     val stereo = good.clone()
     stereo(3) = 0x44.toByte // mode = joint stereo
     val e1 = intercept[IllegalArgumentException] {
-      Mp3Pcm.decodeFile("s.mp3", stereo)
+      Mp3Pcm.sideRows("s.mp3", stereo)
     }
     assert(e1.getMessage.contains("single_channel"))
 
     val e2 = intercept[IllegalArgumentException] {
-      Mp3Huff.decodePair(new Mp3BitReader(Array[Byte](0), "t"), 16)
+      Mp3Huff.encodePair(new Mp3BitWriter, 16, 0, 0)
     }
     assert(e2.getMessage.contains("table 16"))
 
@@ -125,23 +109,23 @@ class Mp3PcmSpec extends SparkSpec {
     assert(e3.getMessage.contains("mixed"))
 
     val e4 = intercept[IllegalArgumentException] {
-      Mp3Pcm.decodeFile("t.mp3", good.take(good.length - 5))
+      Mp3Pcm.sideRows("t.mp3", good.take(good.length - 5))
     }
     assert(e4.getMessage.contains("overran") ||
       e4.getMessage.contains("truncated"))
   }
 
-  test("decodeOf reads the on-disk corpus through binaryFile and matches " +
-      "the per-file expectation rows") {
+  test("sideInfoOf reads the on-disk corpus through binaryFile and " +
+      "matches the per-file scripts") {
     val dir = Mp3PcmFixture.ensure()
-    val rows = Mp3Pcm.decodeOf(
+    val rows = Mp3Pcm.sideInfoOf(
         spark.read.format("binaryFile").load(dir + "/*.mp3"))
-      .collect().map(r => r.file_name -> r).toMap
+      .collect().groupBy(_.file_name)
     assert(rows.size === Mp3PcmFixture.count)
     for (i <- 0 until Mp3PcmFixture.count) {
-      val name = f"pcm_$i%03d.mp3"
-      val (want, _) = Mp3Pcm.decodeFile(name, Mp3PcmFixture.mp3Bytes(i))
-      assert(rows(name) === want)
+      val got = rows(f"pcm_$i%03d.mp3").toSeq
+        .sortBy(r => (r.frame_idx, r.granule))
+      assert(got.map(fields) === expectedSide(i), s"file $i")
     }
   }
 }

@@ -15,6 +15,16 @@ class RegistrySpec extends SparkSpec {
       qs.filter(_._2.oracle.isDefined).keySet)
   }
 
+  test("README's stated registry counts equal the registry size") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val stated = Seq("## Query families \\((\\d+), all oracle-checked\\)",
+        "all (\\d+) registered queries")
+      .map(_.r.findFirstMatchIn(readme).map(_.group(1).toInt))
+    assert(stated === Seq.fill(2)(Some(SparkEntry.queries.size)),
+      "README states a stale query count")
+  }
+
   test("entry query returns rows at sf0.001 (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
