@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Tar, Warc, WarcFixture}
+import graft.ops.{Dirs, Tar, Warc, WarcFixture}
 
 /** Dev measurement for the INGEST-codec scale claims (VERDICT r15 #5):
   * the WARC/TAR container paths are architecturally linear-per-file
@@ -47,44 +47,28 @@ object IngestScale {
     val scales = Seq(("1x", 12, 5, 1), ("10x", 40, 15, 2),
       ("100x", 120, 50, 4), ("1000x", 360, 150, 8))
 
-    // content-keyed + tmp/rename (the WarcFixture.ensure discipline,
-    // review r15): bump the version when the generator changes; an
-    // interrupted run leaves only a .tmp dir, never a trusted partial
+    // content-keyed, built once through Dirs.buildOnce (tmp + rename):
+    // bump the version when the generator changes; an interrupted run
+    // leaves only a .tmp dir, never a trusted partial
     val root = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_ingest_scale_v3")
-    def delRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(delRec))
-      f.delete(); ()
-    }
+    def ascii(s: String) = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
     for ((label, segs, pages, mul) <- scales) {
-      val dir = new java.io.File(root, label)
-      if (!dir.exists()) {
-        val tmp = new java.io.File(root, label + ".tmp")
-        if (tmp.exists()) delRec(tmp)
-        tmp.mkdirs()
+      val dir = new java.io.File(Dirs.buildOnce(
+          new java.io.File(root, label).getAbsolutePath) { tmp =>
         // chunked twins in a SUBDIRECTORY so the *.warc globs keep
         // their exact plain file set (the WarcFixture v4 discipline)
-        val chunkedDir = new java.io.File(tmp, "chunked")
-        chunkedDir.mkdirs()
         (0 until segs).foreach { i =>
           val recs = WarcFixture.recordsOf(i, pages, mul)
-          java.nio.file.Files.write(
-            new java.io.File(tmp, f"seg_$i%04d.warc").toPath,
-            recs.mkString.getBytes(
-              java.nio.charset.StandardCharsets.US_ASCII))
-          java.nio.file.Files.write(
-            new java.io.File(tmp, f"seg_$i%04d.warc.gz").toPath,
-            recs.map(r => WarcFixture.gzMemberStored(r.getBytes(
-              java.nio.charset.StandardCharsets.US_ASCII)))
-              .foldLeft(Array.empty[Byte])(_ ++ _))
-          java.nio.file.Files.write(
-            new java.io.File(chunkedDir, f"segc_$i%04d.warc").toPath,
-            WarcFixture.recordsChunkedOf(i, pages, mul).mkString.getBytes(
-              java.nio.charset.StandardCharsets.US_ASCII))
+          Dirs.write(tmp, f"seg_$i%04d.warc", ascii(recs.mkString))
+          Dirs.write(tmp, f"seg_$i%04d.warc.gz", recs
+            .map(r => WarcFixture.gzMemberStored(ascii(r)))
+            .foldLeft(Array.empty[Byte])(_ ++ _))
+          Dirs.write(tmp, f"chunked/segc_$i%04d.warc",
+            ascii(WarcFixture.recordsChunkedOf(i, pages, mul).mkString))
         }
-        require(tmp.renameTo(dir), s"could not rename $tmp to $dir")
-      }
+      })
       val plainBytes = dir.listFiles().filter(_.getName.endsWith(".warc"))
         .map(_.length).sum
       val totalRecords = segs.toLong * (1 + 2 * pages)

@@ -30,7 +30,8 @@ private[queries] final class SessionMemo[A] {
     * OTHER context are evicted on the way in: this process runs one
     * context at a time (local mode), a dead context's checkpointed
     * RDDs died with it, and the eviction is what bounds the map when a
-    * harness cycles contexts (ProbeSeq's cold rounds). */
+    * harness cycles contexts (`graft.Profile time`'s fresh-session
+    * rounds). */
   def apply(s: SparkSession, key: String)(make: => A): A = {
     val ctx = s.sparkContext.applicationId + ":" +
       s.sparkContext.startTime + ":"

@@ -316,26 +316,63 @@ object StreamQueries {
     * restartable — needs a durable checkpoint and would pass its own
     * checkpointLocation instead of this scratch; the conf
     * (`spark.graft.stream.scratchDir`) retunes the scratch root per
-    * deployment without a rebuild. */
+    * deployment without a rebuild. Each name carries the owning pid, so
+    * the directories of a JVM killed mid-run (which never reaches the
+    * `finally`) are swept by the next run ([[sweepDeadCheckpoints]]) —
+    * on /dev/shm they would otherwise hold RAM until reboot. */
   private def withScratchCheckpoint[T](s: SparkSession)(body: String => T): T = {
-    val base = s.conf.getOption("spark.graft.stream.scratchDir").getOrElse {
+    val base = new java.io.File(s.conf.getOption("spark.graft.stream.scratchDir").getOrElse {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.canWrite) shm.getAbsolutePath
       else System.getProperty("java.io.tmpdir")
-    }
+    })
+    sweepDeadCheckpoints(base)
     val dir = new java.io.File(base,
-      s"graft_stream_ckpt_${streamRunId.incrementAndGet()}_" +
+      s"${ckptPrefix}p${ProcessHandle.current().pid()}_" +
+        s"${streamRunId.incrementAndGet()}_" +
         java.util.UUID.randomUUID().toString.take(8))
     try body(dir.getAbsolutePath) finally Dirs.deleteRec(dir)
   }
 
-  /** Start `w` against a [[withScratchCheckpoint]] location and block to
-    * completion — the one way every gate query executes its stream. */
-  private def runScratch(s: SparkSession,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[_]): Unit =
-    withScratchCheckpoint(s) { ckpt =>
-      w.option("checkpointLocation", ckpt).start().awaitTermination()
-    }
+  private val ckptPrefix = "graft_stream_ckpt_"
+
+  /** Deletes the scratch checkpoint directories under `base` whose owning
+    * process no longer exists. Names without a pid are left alone. */
+  private[graft] def sweepDeadCheckpoints(base: java.io.File): Unit = {
+    val owned = (ckptPrefix + "p(\\d{1,18})_.*").r
+    Option(base.listFiles()).foreach(_.foreach { f =>
+      f.getName match {
+        case owned(pid) if !ProcessHandle.of(pid.toLong).isPresent => Dirs.deleteRec(f)
+        case _ =>
+      }
+    })
+  }
+
+  /** Runs `out` to completion under `AvailableNow` into a memory sink
+    * against a [[withScratchCheckpoint]] location, in output `mode` — the
+    * one way every gate query executes its stream — and returns the
+    * sink's rows. The memory sink registers its name as a session temp
+    * view; the view is dropped before returning, so the rows stay
+    * reachable only through the returned frame, whose analyzed plan holds
+    * the sink itself. */
+  private def runToMemory(s: SparkSession, tag: String, mode: String,
+                          out: org.apache.spark.sql.Dataset[_]): DataFrame = {
+    val sink = s"graft_stream_${tag}_${streamRunId.incrementAndGet()}"
+    try {
+      withScratchCheckpoint(s) { ckpt =>
+        out.writeStream.format("memory").queryName(sink).outputMode(mode)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .option("checkpointLocation", ckpt).start().awaitTermination()
+      }
+      s.table(sink)
+    } finally { s.catalog.dropTempView(sink); () }
+  }
+
+  /** readStream over a slice directory ([[buildSliceDir]]): one
+    * micro-batch per slice file. */
+  private def sliceStream(s: SparkSession, sliced: String): DataFrame =
+    s.readStream.schema(s.read.parquet(sliced).schema)
+      .option("maxFilesPerTrigger", 1).parquet(sliced)
 
   /** q_stream_moments — the ONE registry entry whose Spark side actually
     * executes `readStream`: [[graft.streaming.Streams.momentsStream]]
@@ -356,15 +393,11 @@ object StreamQueries {
   val qStreamMoments = Q("q_stream_moments",
     (s, dir) => withStateParts(s, dir) {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.streaming.Trigger
-      val src = eventsStreamSliced(s, dir)
+      val src = sliceStream(s, slicedEventsDir(s, dir))
         .select(col("event_type"), col("value"))
-      val sink = s"graft_stream_moments_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.momentsStream(src, "event_type", "value")
-        .toDF("event_type", "n", "mean_value", "std_value")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "moments", "update",
+          graft.streaming.Streams.momentsStream(src, "event_type", "value")
+            .toDF("event_type", "n", "mean_value", "std_value"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("event_type")).orderBy(col("n").desc)))
         .filter(col("rk") === 1).drop("rk")
@@ -474,15 +507,6 @@ object StreamQueries {
     }
   }
 
-  /** readStream over [[slicedEventsDir]]: one micro-batch per time slice. */
-  private def eventsStreamSliced(s: SparkSession, dir: String,
-                                 parts: Int = 4): DataFrame = {
-    val sliced = slicedEventsDir(s, dir, parts)
-    val schema = s.read.parquet(sliced).schema
-    s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(sliced)
-  }
-
   /** q_stream_sessionize — a SECOND real readStream execution in the
     * gate, exercising the state pattern q_stream_moments does not:
     * `flatMapGroupsWithState` session windows
@@ -505,18 +529,14 @@ object StreamQueries {
   val qStreamSessionize = Q("q_stream_sessionize",
     (s, dir) => withStateParts(s, dir) {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val src = eventsStreamSliced(s, dir, parts = 2)
+      val src = sliceStream(s, slicedEventsDir(s, dir, parts = 2))
         .select(col("user_id").cast("long").as("user_id"),
           unix_micros(col("ts")).as("ts_us"),
           col("event_id").cast("long").as("event_id"))
         .as[graft.ops.Sessionize.Event]
-      val sink = s"graft_stream_sess_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.sessionizeStreamSnapshot(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "sess", "update",
+          graft.streaming.Streams.sessionizeStreamSnapshot(src))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("user_id"), col("session_id"))
             .orderBy(col("n_events").desc)))
@@ -544,13 +564,8 @@ object StreamQueries {
     * this hourly rollup; unbounded-key streams use the Update path. */
   val qStreamHourly = Q("q_stream_hourly",
     (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"graft_stream_hourly_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.hourlyCounts(
-          eventsStreamSliced(s, dir, parts = 2))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "hourly", "complete", graft.streaming.Streams.hourlyCounts(
+        sliceStream(s, slicedEventsDir(s, dir, parts = 2))))
     },
     qHourly.oracle,
     "north star: built-in window() streaming aggregation in the gate " +
@@ -585,16 +600,8 @@ object StreamQueries {
     * than asserts. */
   val qStreamAppend = Q("q_stream_append",
     (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sliced = lateSlicedEventsDir(s, dir)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
-      val sink = s"graft_stream_append_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.hourlyCounts(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "append", "append", graft.streaming.Streams.hourlyCounts(
+        sliceStream(s, lateSlicedEventsDir(s, dir))))
     },
     Some("WITH " + lateOntimeSql + """
       |SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
@@ -640,16 +647,8 @@ object StreamQueries {
     * that spec names the drift and this cutoff flips with it. */
   val qStreamSessWin = Q("q_stream_sess_win",
     (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sliced = lateSlicedEventsDir(s, dir, onParts = 2)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
-      val sink = s"graft_stream_sesswin_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.sessionWindows(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "sesswin", "append", graft.streaming.Streams.sessionWindows(
+        sliceStream(s, lateSlicedEventsDir(s, dir, onParts = 2))))
     },
     Some("WITH " + lateOntimeSql + """, gaps AS (
       |  SELECT user_id, ts, event_id,
@@ -703,11 +702,8 @@ object StreamQueries {
     * 10× bit-identity record, the gate by the join itself.) */
   val qStreamJoin = Q("q_stream_join",
     (s, dir) => withStateParts(s, dir, storeDivisor = 2) {
-      import org.apache.spark.sql.streaming.Trigger
       val sliced = lateSlicedEventsDir(s, dir, onParts = 2)
-      val schema = s.read.parquet(sliced).schema
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(sliced)
+      def src() = sliceStream(s, sliced)
       val signups = src().filter(col("event_type") === "signup")
         .withWatermark("ts", "2 hours")
         .select(col("user_id"), col("event_id").as("signup_id"),
@@ -723,10 +719,7 @@ object StreamQueries {
         .select(col("user_id"), col("signup_id"), col("click_id"),
           (unix_micros(col("c_ts")) - unix_micros(col("s_ts")))
             .as("offset_us"))
-      val sink = s"graft_stream_join_${streamRunId.incrementAndGet()}"
-      runScratch(s, joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "join", "append", joined)
     },
     Some("WITH " + lateOntimeSql + """, s AS (
       |  SELECT user_id, event_id AS signup_id, epoch_us(ts) AS s_us
@@ -763,20 +756,13 @@ object StreamQueries {
     * join). */
   val qStreamDedup = Q("q_stream_dedup",
     (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sliced = lateSlicedEventsDir(s, dir, onParts = 2)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
+      val src = sliceStream(s, lateSlicedEventsDir(s, dir, onParts = 2))
         .withColumn("m", date_trunc("minute", col("ts")))
         .withWatermark("m", "2 hours")
         .dropDuplicates("user_id", "event_type", "m")
         .select(col("user_id"), col("event_type"),
           date_format(col("m"), "yyyy-MM-dd HH:mm:ss").as("minute"))
-      val sink = s"graft_stream_dedup_${streamRunId.incrementAndGet()}"
-      runScratch(s, src.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "dedup", "append", src)
     },
     Some("WITH " + lateOntimeSql + """
       |SELECT DISTINCT user_id, event_type,
@@ -885,12 +871,8 @@ object StreamQueries {
     * share nothing but the window contract. */
   val qStreamNearDup = Q("q_stream_neardup",
     (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val sliced = neardupSliceDir(s, dir)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
+      val src = sliceStream(s, neardupSliceDir(s, dir))
       // each slice is ONE parquet file -> one task; spread the micro-batch
       // across the session's cores BEFORE the md5-heavy banding projection
       // (the first 100x probe ran the whole batch's hashing on one core).
@@ -904,11 +886,8 @@ object StreamQueries {
       val rows = neardupBandRows(src.repartition(bandWidth, col("doc_id")))
         .withWatermark("ts", "0 seconds")
         .as[graft.streaming.Streams.BandArrival]
-      val sink = s"graft_stream_neardup_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.neardupStream(rows, neardupGapMin)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runToMemory(s, "neardup", "update",
+          graft.streaming.Streams.neardupStream(rows, neardupGapMin))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"),
           sum(col("dup")).as("n_dup_bands"),
@@ -970,7 +949,6 @@ object StreamQueries {
     * matching the batch query's file set. */
   val qStreamCrawl = Q("q_stream_crawl",
     (s, _) => {
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types._
       val fdir = graft.ops.WarcFixture.ensure()
       val binSchema = StructType(Seq(
@@ -983,8 +961,7 @@ object StreamQueries {
         .option("maxFilesPerTrigger", "4")
         .option("pathGlobFilter", "*.warc")
         .load(fdir)
-      val sink = s"graft_stream_crawl_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.ops.Warc.scanWarc(src).toDF()
+      runToMemory(s, "crawl", "complete", graft.ops.Warc.scanWarc(src).toDF()
         .filter(col("warc_type") === "response")
         .groupBy(col("body_md5"))
         .agg(min(struct(col("file_name"), col("rec_idx"),
@@ -992,10 +969,8 @@ object StreamQueries {
           count(lit(1L)).as("n_captures"))
         .select(col("body_md5"), col("first.file_name").as("file_name"),
           col("first.rec_idx").as("rec_idx"),
-          col("first.target_uri").as("target_uri"), col("n_captures"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))
-      s.table(sink).orderBy("body_md5")
+          col("first.target_uri").as("target_uri"), col("n_captures")))
+        .orderBy("body_md5")
     },
     graft.queries.TextQueries.qCrawlDedup.oracle,
     "north star: streaming crawl ingestion in the gate (WARC codec as a " +

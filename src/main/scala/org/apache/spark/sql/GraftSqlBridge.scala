@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Bridge into the `private[sql]` Column↔Expression converters — the
   * standard pattern for third-party Catalyst extensions (a custom
   * Expression is useless without a way to wrap it in a user-facing
-  * Column). Everything referenced here is Apache Spark's own API; only
-  * the package placement grants access.
+  * Column) — and into the `private[spark]` listener bus. Everything
+  * referenced here is Apache Spark's own API; only the package placement
+  * grants access.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -14,4 +15,9 @@ object GraftSqlBridge {
   def dataFrame(spark: SparkSession,
                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every event posted so far (task ends, streaming
+    * progress) has reached its listeners. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
